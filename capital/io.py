@@ -183,11 +183,16 @@ def overlapped_job(fn, *args, **kwargs):
     consumes the future, the bare ``submit`` pattern leaked a running
     background Spark job against the session (the worker thread is
     non-daemon, so it also kept the process alive). On exit this
-    cancels the future if it is still queued and joins the worker —
-    a bounded wait, since the overlapped work is by contract one
-    bounded action — so no background job ever outlives the call.
-    In the success path the future is already done and the shutdown
-    returns immediately.
+    joins the worker, so no background job ever outlives the call.
+    ``future.cancel()`` only covers a still-queued task; with one
+    worker and an immediate submit the task is always already
+    running, so the cancel never succeeds and a body that raises
+    waits for the background action to finish before its exception
+    propagates. That wait is bounded only because the overlapped work
+    is by contract one small action (metadata-sized collects today);
+    a long overlapped action would stall failure propagation for its
+    whole duration. In the success path the future is already done
+    and the shutdown returns immediately.
     """
     from concurrent.futures import ThreadPoolExecutor
 

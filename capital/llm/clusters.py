@@ -226,10 +226,18 @@ def deduplicated_corpus(
     ``component_id`` label — so survivors are the rows whose id equals
     their label, and the corpus anti-joins the (small) drop set
     ``{v : component_id != v}`` instead of semi-joining a corpus-sized
-    keeper relation (round 17; broadcastable at lake scale). Identical
-    output for non-null ids (the corpus contract).
+    keeper relation (round 17; broadcastable at lake scale).
+
+    Rows with a NULL id are dropped explicitly, as the keeper
+    semi-join did (a NULL key never matches either join form, so the
+    anti-join alone would keep them). ``components`` must cover every
+    non-null id of ``df`` (the ``connected_components(pairs,
+    df.select(id_col))`` shape callers build): an uncovered id is kept
+    here, where the semi-join dropped it.
     """
     dropped = components.filter(
         F.col(id_col) != F.col("component_id")
     ).select(id_col)
-    return df.join(dropped, id_col, "left_anti")
+    return df.filter(F.col(id_col).isNotNull()).join(
+        dropped, id_col, "left_anti"
+    )

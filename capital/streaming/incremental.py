@@ -1402,6 +1402,21 @@ def incremental_curation_run(
             "n_tokens", "n_removed_tokens",
             F.md5("scrubbed_text").alias("scrubbed_md5"),
         ).withColumn("batch_id", F.lit(batch_id))
+        # INVARIANT (lazy barriers vs state writes): every lazily
+        # checkpointed frame whose lineage reads a state dir must be
+        # materialized before that dir is written. c4d reads
+        # lines_state_dir (through ``prior``) and sh reads c4d; a
+        # localCheckpoint(eager=False) fill-in that first runs after
+        # the own_lines write below would recompute c4d against the
+        # already-appended line index and silently change the output.
+        # Today c4d is filled before this loop: the eager plan-build
+        # actions above (the chunked_pair_join skew probe inside
+        # verified_neardup_pairs and the connected_components
+        # fixpoint collects) compute it, and the flags write, which
+        # runs first, reads it again; sh reads only c4d, so it is
+        # safe once c4d is filled. A change that defers those actions
+        # (e.g. a max_block_hint that skips the probe) or reorders
+        # this loop must materialize c4d explicitly first.
         for df_out, path in (
             (final, flags_dir),
             (own_lines, lines_state_dir),

@@ -16,6 +16,12 @@ SF_DIR = os.environ.get("CAPITAL_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from capital.session import get_spark
 
+    # The engine's local default heap (16g) exceeds the RAM of small
+    # hosts, and G1 grows the committed heap toward it over a full
+    # run (13.5 GB resident on a 16 GB host) until the kernel kills
+    # the JVM. The sf0.001 suite needs far less; an explicit
+    # SPARK_GRAFT_DRIVER_MEM still wins.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     # Small local session for tests: fast startup, deterministic conf.
     spark = get_spark(
         app_name="capital-tests",

@@ -57,6 +57,31 @@ def test_summary_and_survivor_corpus(spark):
     assert survivors == [1, 7]
 
 
+def test_survivor_corpus_drops_null_ids_like_keeper_semi_join(spark):
+    """A NULL-id row never matches a join key: the keeper semi-join
+    dropped it, and deduplicated_corpus drops it explicitly rather than
+    letting the drop-set anti-join keep it."""
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    docs = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c"), (7, "d"), (None, "null id")],
+        "doc_id long, text string",
+    )
+    comps = connected_components(
+        pairs, docs.select("doc_id").filter(F.col("doc_id").isNotNull())
+    )
+    keepers = component_summary(comps).select(
+        F.col("keep_id").alias("doc_id")
+    )
+    old = sorted(
+        (r.doc_id, r.text)
+        for r in docs.join(keepers, "doc_id", "left_semi").collect()
+    )
+    new = sorted(
+        (r.doc_id, r.text) for r in deduplicated_corpus(docs, comps).collect()
+    )
+    assert old == new == [(1, "a"), (7, "d")]
+
+
 def test_incremental_probe_flags_only_history_collisions(spark):
     from capital.llm.dedup import (
         band_keys,
