@@ -39,7 +39,13 @@ def _gate_survivors(
     """The scored-and-gated corpus — the one expensive narrow lineage
     (quality expressions + the repetition explode) both ``clean_corpus``
     and ``funnel_stats`` hang off. Built in exactly one place so a
-    caller can persist it once and share it."""
+    caller can persist it once and share it.
+
+    NULL-id documents drop here, at ingress: a NULL id never matches
+    the drop-set anti-join, so such a document would otherwise survive
+    dedup unconditionally (``clusters.deduplicated_corpus`` drops them
+    the same way)."""
+    docs = docs.filter(F.col("doc_id").isNotNull())
     scored = with_repetition(with_quality_score(docs))
     return scored.filter(
         (F.col("quality_score") >= quality_min)
@@ -84,8 +90,8 @@ def clean_corpus(
     # the old corpus-sized component_summary groupBy + keeper semi-join
     # re-derived keep_id through a full corpus exchange. Anti-joining
     # the (tiny, broadcastable) dropped ids is output-identical on the
-    # non-null-id corpus — survivors = kept \ {v in pair graph :
-    # label(v) != v}.
+    # non-null-id corpus (NULL ids drop in _gate_survivors) —
+    # survivors = kept \ {v in pair graph : label(v) != v}.
     dropped = duplicate_drop_ids(pairs)
     return (
         with_pii_scrub(kept)

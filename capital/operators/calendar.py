@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from capital.operators.caching import CacheScope, scoped_persist
+
 #: Korean day names indexed by Spark dayofweek (1=Sunday … 7=Saturday),
 #: mirroring the reference's CASE ladder (sql.py:64-70).
 KOREAN_DAY_NAMES = ("일요일", "월요일", "화요일", "수요일", "목요일", "금요일", "토요일")
@@ -79,6 +81,7 @@ def merge_holidays(
     holidays: DataFrame,
     date_col: str = "calnd_dd_dy",
     name_col: str = "holdy_nm",
+    scope: CacheScope | None = None,
 ) -> DataFrame:
     """OR real exchange holidays into ``is_market_holiday``.
 
@@ -91,6 +94,15 @@ def merge_holidays(
     the (min-deduped — a date can hold multiple observances) name for
     lineage. The holiday side is dimension-sized and broadcasts; the
     calendar never shuffles.
+
+    The merged dimension is persisted (through ``scope`` when given),
+    lazily: building it runs no job, the first consumer fills the
+    cache, and every later consumer — e.g. each micro-batch of a
+    :func:`~capital.transforms.market_data.gate_on_open_market`
+    stream — reads the cached rows instead of re-running the holiday
+    aggregate and its broadcast. Snapshot semantics: ``holidays`` is
+    read once, at first use; a holiday table that changes afterwards
+    is not seen until the cache is released and the calendar rebuilt.
     """
     h = (
         holidays.select(
@@ -100,7 +112,8 @@ def merge_holidays(
         .groupBy("date")
         .agg(F.min("holiday_name").alias("holiday_name"))
     )
-    return cal.join(F.broadcast(h), "date", "left").withColumn(
+    merged = cal.join(F.broadcast(h), "date", "left").withColumn(
         "is_market_holiday",
         F.col("is_market_holiday") | F.col("holiday_name").isNotNull(),
     )
+    return scoped_persist(merged, scope)

@@ -10,25 +10,26 @@ per-query window idiom. Complements :mod:`capital.operators.asof`
 fills with a constant, not the last observation).
 
 Semantics: for each key, a dense daily spine spans the key's own
-[min(date), max(date)] (or a caller-supplied spine); observed values
-forward-fill (last observation carried forward); ``gap_days`` reports
-the distance to the carried observation and ``is_observed`` marks
-real rows. ``max_gap_days`` bounds the carry (a price quote from two
-years ago is not a price) — beyond it the fill nulls out, the
+[min(date), max(date)]; observed values forward-fill (last
+observation carried forward); ``gap_days`` reports the distance to
+the carried observation and ``is_observed`` marks real rows.
+``max_gap_days`` bounds the carry (a price quote from two years ago
+is not a price) — beyond it the fill nulls out, the
 monitoring-friendly behavior.
 
-Shape at scale: ONE hash exchange of the raw rows by key up front —
-``HashPartitioning(key)`` satisfies every downstream clustering
-requirement (the (key, date) aggregate, the bounds aggregate, the
-spine↔obs equi-join, the per-key window), so the whole pipeline runs
-on a single shuffle with no re-exchange. The join is pinned to a
-co-partitioned sort-merge (``hint("merge")``): without it Catalyst
-broadcasts the observation side, which re-buys the join for the price
-of building+probing a keys×days hashed relation per task AND forces a
-fresh window exchange — measured 2.6 s vs 1.2 s at sf0.1, and at
-100 TB the obs side outgrows any broadcast. The spine is a narrow
-per-key ``sequence`` explode (keys × days rows — the OUTPUT size,
-nothing quadratic). No driver work, no global sort.
+Shape at scale: ONE hash exchange of the raw rows by key up front,
+ONE scan. ``HashPartitioning(key)`` satisfies the clustering of the
+(key, date) aggregate and of the per-key window, so neither
+re-exchanges. The window runs over the *observations*, not the dense
+spine: each observed day carries the running ``last`` value, the
+date of that value and ``lead(date)``, and a narrow per-observation
+``sequence`` explode fills the days up to the next observation. The
+explode IS the spine — no bounds aggregate, no spine↔obs join (an
+equi-join on (key, date) cannot reuse ``hash(key)`` under Spark's
+default ``requireAllClusterKeysForCoPartition``: both of its sides
+and the window after it would re-shuffle, and the input would be
+scanned twice). Output is keys × days rows — the OUTPUT size,
+nothing quadratic. No driver work, no global sort.
 """
 
 from __future__ import annotations
@@ -52,45 +53,52 @@ def regularize_daily(
     observed span: ``(key, date, value, is_observed, gap_days)`` —
     ``value`` is the carried observation (null before the first
     observation, and beyond ``max_gap_days`` when set), ``gap_days``
-    the age of the carried value (0 on observed days).
+    the age of the carried value (0 on observed days). Rows with a
+    NULL date drop; a NULL key keeps its span but carries no value;
+    a NULL value is neither observed nor carried.
     """
     key = F.col(key_col)
-    day = F.col(date_col).cast("date")
     obs = (
-        df.select(key.alias("key"), day.alias("date"),
+        df.select(key.alias("key"), F.col(date_col).cast("date").alias("d"),
                   F.col(value_col).alias("__v"))
+        .filter(F.col("d").isNotNull())
         .repartition(F.col("key"))
-        .groupBy("key", "date")
+        .groupBy("key", "d")
         .agg(F.max("__v").alias("__v"))
+        # A NULL key keeps its span but never carries a value: NULL
+        # equals no key.
+        .withColumn("__v", F.when(F.col("key").isNotNull(), F.col("__v")))
     )
-    bounds = obs.groupBy("key").agg(
-        F.min("date").alias("__d0"), F.max("date").alias("__d1")
-    )
-    spine = bounds.select(
+    by_key = Window.partitionBy("key").orderBy(F.asc("d"))
+    running = by_key.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    filled = obs.select(
         "key",
+        "d",
+        F.last("__v", ignorenulls=True).over(running).alias("__carried"),
+        F.last(F.when(F.col("__v").isNotNull(), F.col("d")), ignorenulls=True)
+        .over(running)
+        .alias("__d_obs"),
+        F.lead("d").over(by_key).alias("__d_next"),
+    ).withColumn(
+        "date",
         F.explode(
-            F.sequence(F.col("__d0"), F.col("__d1"), F.expr("interval 1 day"))
-        ).alias("date"),
+            F.sequence(
+                F.col("d"),
+                F.coalesce(F.date_sub(F.col("__d_next"), 1), F.col("d")),
+                F.expr("interval 1 day"),
+            )
+        ),
     )
-    joined = spine.join(obs.hint("merge"), ["key", "date"], "left")
-    w = (
-        Window.partitionBy("key")
-        .orderBy(F.asc("date"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = F.last("__v", ignorenulls=True).over(w)
-    last_obs_date = F.last(
-        F.when(F.col("__v").isNotNull(), F.col("date")), ignorenulls=True
-    ).over(w)
-    gap = F.datediff(F.col("date"), last_obs_date)
-    value: Column = carried
+    gap = F.datediff(F.col("date"), F.col("__d_obs"))
+    value: Column = F.col("__carried")
     if max_gap_days is not None:
-        value = F.when(gap <= int(max_gap_days), carried)
-    return joined.select(
+        value = F.when(gap <= int(max_gap_days), value)
+    return filled.select(
         F.col("key").alias(key_col),
         "date",
         value.alias(value_col),
-        F.col("__v").isNotNull().alias("is_observed"),
+        # Observed exactly where the carried value is 0 days old.
+        gap.eqNullSafe(0).alias("is_observed"),
         gap.alias("gap_days"),
     )
 

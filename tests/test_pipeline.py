@@ -53,3 +53,20 @@ def test_funnel_scores_corpus_exactly_once(spark, sf_dir, monkeypatch):
     stats = funnel_stats(docs).collect()[0]
     assert stats.n_input >= stats.n_after_gates >= stats.n_survivors > 0
     assert calls["n"] == 1
+
+
+def test_clean_corpus_drops_null_id_documents(spark, sf_dir):
+    """A NULL id never matches the drop-set anti-join, so the funnel
+    drops NULL-id documents at ingress — even an exact copy of a
+    surviving document, which would otherwise survive beside it."""
+    docs = load_table(spark, sf_dir, "documents")
+    base = sorted(map(tuple, clean_corpus(docs).collect()))
+    survivor = base[0][0]
+    null_copy = docs.filter(F.col("doc_id") == survivor).withColumn(
+        "doc_id", F.lit(None).cast("long")
+    )
+    with_null = docs.unionByName(null_copy)
+    assert sorted(map(tuple, clean_corpus(with_null).collect())) == base
+    stats = funnel_stats(with_null).collect()[0]
+    assert stats.n_input == docs.count() + 1
+    assert stats.n_survivors == len(base)

@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from capital.operators.resample import regularize_daily
@@ -88,6 +91,117 @@ def test_regularize_keys_independent_and_layout_invariant(spark):
     assert keys == {"A", "B"}
     # B's spine is one day — its own span, not A's.
     assert sum(1 for t in a if t[0] == "B") == 1
+
+
+def _locf_reference(rows, max_gap_days=None):
+    """Pure-Python LOCF over ``(k, d, v)`` rows: NULL-date rows drop,
+    same-day values reduce with max, each key spans its own observed
+    [min, max] days, a NULL key keeps its span but never carries, and
+    a NULL value is neither observed nor carried."""
+    day_max = {}
+    for k, d, v in rows:
+        if d is None:
+            continue
+        cur = day_max.get((k, d))
+        seen = [x for x in (cur, v) if x is not None]
+        day_max[(k, d)] = max(seen) if seen else None
+    limit = float("inf") if max_gap_days is None else max_gap_days
+    out = []
+    for k in {k for k, _ in day_max}:
+        days = sorted(d for kk, d in day_max if kk == k)
+        last = None
+        day = days[0]
+        while day <= days[-1]:
+            v = day_max.get((k, day)) if k is not None else None
+            if v is not None:
+                last = (v, day)
+            gap = (day - last[1]).days if last else None
+            carried = last[0] if last and gap <= limit else None
+            out.append((k, day, carried, v is not None, gap))
+            day += datetime.timedelta(days=1)
+    return out
+
+
+def _sorted_rows(rows):
+    return sorted(rows, key=lambda r: tuple((x is None, x) for x in r))
+
+
+_EDGE_ROWS = [
+    ("A", _d("2024-01-01"), 10.0),
+    ("A", _d("2024-01-04"), None),      # NULL value: not observed, not carried
+    ("A", _d("2024-01-06"), 20.0),
+    ("A", _d("2024-01-06"), 25.0),      # same-day duplicate: max wins
+    ("A", None, 99.0),                  # NULL date: dropped
+    (None, _d("2024-01-02"), 5.0),      # NULL key: span kept, no value
+    (None, _d("2024-01-05"), 7.0),
+    ("B", _d("2024-02-01"), None),      # all-NULL key
+    ("B", _d("2024-02-03"), None),
+    ("C", _d("2024-03-01"), 1.0),       # single-day key
+    ("D", _d("2024-01-01"), None),      # span starts before first value
+    ("D", _d("2024-01-03"), 3.0),
+    ("E", None, 1.0),                   # only a NULL date: no rows
+    ("F", _d("2024-01-01"), None),      # same-day NULL beside a value
+    ("F", _d("2024-01-01"), 1.0),
+]
+
+
+@pytest.mark.parametrize("max_gap_days", [None, 0, 1, 30])
+def test_regularize_matches_locf_reference_on_null_edges(spark, max_gap_days):
+    got = regularize_daily(
+        _obs(spark, _EDGE_ROWS), "k", "d", "v", max_gap_days=max_gap_days
+    ).collect()
+    expected = _locf_reference(_EDGE_ROWS, max_gap_days)
+    assert _sorted_rows(map(tuple, got)) == _sorted_rows(expected)
+    keys = {r[0] for r in expected}
+    assert None in keys and "B" in keys and "E" not in keys
+
+
+_SPARSE_ROW = st.tuples(
+    st.sampled_from(["A", "B", "C", None]),
+    st.one_of(
+        st.none(),
+        st.integers(0, 40).map(
+            lambda i: datetime.date(2024, 1, 1) + datetime.timedelta(days=i)
+        ),
+    ),
+    st.one_of(st.none(), st.integers(-5, 5).map(float)),
+)
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    st.lists(_SPARSE_ROW, max_size=25),
+    st.sampled_from([None, 0, 1, 3, 30]),
+)
+def test_regularize_property_random_sparse_series(spark, rows, max_gap_days):
+    got = regularize_daily(
+        _obs(spark, rows), "k", "d", "v", max_gap_days=max_gap_days
+    ).collect()
+    assert _sorted_rows(map(tuple, got)) == _sorted_rows(
+        _locf_reference(rows, max_gap_days)
+    )
+
+
+def test_regularize_plans_one_exchange_one_scan(spark, tmp_path):
+    """The fill is a window over the observations plus a narrow
+    explode: the upfront hash(key) exchange is the only shuffle, and
+    the input is scanned once (no bounds aggregate, no spine join)."""
+    rows = [
+        (f"K{i % 7}", _d("2024-01-01") + datetime.timedelta(days=3 * i),
+         float(i))
+        for i in range(60)
+    ]
+    path = str(tmp_path / "obs.parquet")
+    _obs(spark, rows).write.parquet(path)
+    out = regularize_daily(
+        spark.read.parquet(path), "k", "d", "v", max_gap_days=5
+    )
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    lines = [ln.strip(" +-:*()0123456789") for ln in final.splitlines()]
+    assert sum(ln.startswith("Exchange ") for ln in lines) == 1, final
+    assert sum(ln.startswith("FileScan ") for ln in lines) == 1, final
 
 
 # --- OHLC daily candles ---------------------------------------------------

@@ -325,6 +325,52 @@ def test_gate_on_open_market(spark):
     assert days == {"2024-01-05", "2024-01-08"}
 
 
+def test_gate_reuses_one_merged_holiday_calendar(spark):
+    """The holiday-merged calendar is materialized once: a second
+    gate over it (the next micro-batch) runs only its one broadcast
+    job and returns the same rows; releasing the scope unpersists it."""
+    import time
+
+    from capital.operators.caching import CacheScope
+    from capital.operators.calendar import merge_holidays
+
+    facts = spark.createDataFrame(
+        [(f"2024-01-{d:02d}",) for d in range(1, 15)], "d string"
+    ).select(F.to_date("d").alias("date"))
+    hol = spark.createDataFrame(
+        [("2024-01-03", "holiday"), ("2024-01-09", "holiday")],
+        "calnd_dd_dy string, holdy_nm string",
+    )
+    scope = CacheScope()
+    cal = merge_holidays(
+        build_calendar(spark, "2024-01-01", "2024-01-31"), hol, scope=scope
+    )
+    assert scope.frames == [cal]
+
+    def gate(group):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            gated = gate_on_open_market(facts, cal, "date").collect()
+        finally:
+            sc.setJobGroup(None, None)
+        time.sleep(0.3)  # let the status tracker register the tail
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        return sorted(r.date.day for r in gated), len(jobs)
+
+    first, _ = gate("gate-first")
+    second, jobs = gate("gate-second")
+    # Weekends (6-7, 13-14) and the two holidays are closed.
+    assert first == second == [1, 2, 4, 5, 8, 10, 11, 12]
+    # One broadcast of the cached open days, plus the collect's own
+    # result job; an uncached calendar re-runs its holiday aggregate
+    # and broadcast every time (4 jobs).
+    assert jobs <= 2
+    assert cal.storageLevel.useMemory
+    scope.release()
+    assert not cal.storageLevel.useMemory and not cal.storageLevel.useDisk
+
+
 def test_file_read_with_dead_letter(spark, tmp_path):
     """Malformed JSON lines quarantine with their raw text; good rows
     load under the declared schema; nothing vanishes."""

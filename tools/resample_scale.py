@@ -7,12 +7,13 @@ independent key group whose daily series is identical to its
 original's, so the output must be exactly N of every 1x row — row
 count exactly N-fold, and the exact-integer summaries (micro-unit
 value sum over filled days, observed-day count, gap-day sum) exactly
-N-fold. This pins the round-13 single-exchange shape (upfront
-hash(key) repartition serving the (key,date) aggregate, the bounds
-aggregate, the co-partitioned merge join AND the per-key window) at
-key cardinalities 1x-30x the toy corpus.
+N-fold. This pins the single-exchange shape (one upfront hash(key)
+repartition serving the (key,date) aggregate AND the per-key window
+over the observations; the dense spine is a narrow per-observation
+explode, with no join) at key cardinalities 1x-30x the toy corpus.
 
-Results recorded in DESIGN_SCALE.md (round 14).
+Usage: python tools/resample_scale.py  (SPARK_GRAFT_SF_DIR selects
+the input, default sf0.1). Results recorded in DESIGN_SCALE.md.
 """
 
 from __future__ import annotations
