@@ -25,8 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from capital.operators.caching import CacheScope, scoped_persist
-
 #: Korean day names indexed by Spark dayofweek (1=Sunday … 7=Saturday),
 #: mirroring the reference's CASE ladder (sql.py:64-70).
 KOREAN_DAY_NAMES = ("일요일", "월요일", "화요일", "수요일", "목요일", "금요일", "토요일")
@@ -81,7 +79,6 @@ def merge_holidays(
     holidays: DataFrame,
     date_col: str = "calnd_dd_dy",
     name_col: str = "holdy_nm",
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """OR real exchange holidays into ``is_market_holiday``.
 
@@ -95,14 +92,19 @@ def merge_holidays(
     lineage. The holiday side is dimension-sized and broadcasts; the
     calendar never shuffles.
 
-    The merged dimension is persisted (through ``scope`` when given),
-    lazily: building it runs no job, the first consumer fills the
-    cache, and every later consumer — e.g. each micro-batch of a
-    :func:`~capital.transforms.market_data.gate_on_open_market`
-    stream — reads the cached rows instead of re-running the holiday
-    aggregate and its broadcast. Snapshot semantics: ``holidays`` is
-    read once, at first use; a holiday table that changes afterwards
-    is not seen until the cache is released and the calendar rebuilt.
+    The merged dimension is returned persisted, lazily: building it
+    runs no job and the first consumer fills the cache. This pays off
+    for a caller that holds one calendar across micro-batches (each
+    :func:`~capital.transforms.market_data.gate_on_open_market` batch
+    then broadcasts the cached rows in 1 job instead of re-running the
+    holiday aggregate and its broadcast in 3); ``perfbench``'s
+    ``daily_ingest`` stream is the one such caller today. A one-shot
+    consumer (the registered calendar queries) pays one extra
+    cache-fill job under AQE, and its cache entry stays until the
+    frame is unpersisted. Snapshot semantics:
+    ``holidays`` is read once, at first use; a holiday table that
+    changes afterwards is not seen until the caller ``unpersist()``s
+    the returned frame and builds the calendar again.
     """
     h = (
         holidays.select(
@@ -116,4 +118,4 @@ def merge_holidays(
         "is_market_holiday",
         F.col("is_market_holiday") | F.col("holiday_name").isNotNull(),
     )
-    return scoped_persist(merged, scope)
+    return merged.persist()

@@ -327,11 +327,9 @@ def test_gate_on_open_market(spark):
 
 def test_gate_reuses_one_merged_holiday_calendar(spark):
     """The holiday-merged calendar is materialized once: a second
-    gate over it (the next micro-batch) runs only its one broadcast
-    job and returns the same rows; releasing the scope unpersists it."""
-    import time
-
-    from capital.operators.caching import CacheScope
+    gate over it (the next micro-batch) runs fewer jobs than the first,
+    only its one broadcast, and returns the same rows; ``unpersist()``
+    releases it."""
     from capital.operators.calendar import merge_holidays
 
     facts = spark.createDataFrame(
@@ -341,11 +339,7 @@ def test_gate_reuses_one_merged_holiday_calendar(spark):
         [("2024-01-03", "holiday"), ("2024-01-09", "holiday")],
         "calnd_dd_dy string, holdy_nm string",
     )
-    scope = CacheScope()
-    cal = merge_holidays(
-        build_calendar(spark, "2024-01-01", "2024-01-31"), hol, scope=scope
-    )
-    assert scope.frames == [cal]
+    cal = merge_holidays(build_calendar(spark, "2024-01-01", "2024-01-31"), hol)
 
     def gate(group):
         sc = spark.sparkContext
@@ -354,20 +348,23 @@ def test_gate_reuses_one_merged_holiday_calendar(spark):
             gated = gate_on_open_market(facts, cal, "date").collect()
         finally:
             sc.setJobGroup(None, None)
-        time.sleep(0.3)  # let the status tracker register the tail
+        # The status tracker is fed by the asynchronous listener bus;
+        # drain it so no job of the group goes uncounted.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         return sorted(r.date.day for r in gated), len(jobs)
 
-    first, _ = gate("gate-first")
+    first, first_jobs = gate("gate-first")
     second, jobs = gate("gate-second")
     # Weekends (6-7, 13-14) and the two holidays are closed.
     assert first == second == [1, 2, 4, 5, 8, 10, 11, 12]
     # One broadcast of the cached open days, plus the collect's own
-    # result job; an uncached calendar re-runs its holiday aggregate
-    # and broadcast every time (4 jobs).
+    # result job; the first gate also runs the holiday aggregate and
+    # fills the cache, as an uncached calendar would every time.
     assert jobs <= 2
+    assert jobs < first_jobs
     assert cal.storageLevel.useMemory
-    scope.release()
+    cal.unpersist()
     assert not cal.storageLevel.useMemory and not cal.storageLevel.useDisk
 
 
