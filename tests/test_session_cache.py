@@ -47,7 +47,7 @@ def test_clear_plan_cache_busts_memoized_objects(spark, sf_dir):
     """Round-12 bench integrity: re-executing the SAME DataFrame
     object reuses its shuffle files and skips whole stages, so a
     timing harness must get a FRESH object per pass.
-    clear_plan_cache() guarantees that; bench.py and tools/qtime.py
+    clear_plan_cache() guarantees that; bench.py and tools/qprofile.py
     call it after warmup and between passes."""
     from capital.queries import all_queries
     from capital.queries.registry import clear_plan_cache
