@@ -62,6 +62,166 @@ class Lake:
         return os.path.join(self.root, layer, table)
 
 
+#: Footer key under which Spark's parquet writer stores the written
+#: frame's schema as JSON.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _listed(name: str) -> bool:
+    """Spark's file-listing filter (``HadoopFSUtils.shouldFilterOutPathName``):
+    hidden (``.``) and ``_``-prefixed names are skipped, except partition
+    directories (``_k=v``) and the two parquet summary files."""
+    if name.startswith(_SUMMARY_FILES):
+        return True
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _footer_file(path: str) -> tuple[str, set[str]] | None:
+    """The one file Spark's non-merging schema inference reads for a
+    local ``path`` (``ParquetUtils.inferSchema``: ``_common_metadata``,
+    else ``_metadata``, else the first data file in sorted path order),
+    plus the partition-directory keys under ``path``. ``None`` when there
+    is no such file or Spark would not list the directory itself (a
+    streaming sink's ``_spark_metadata`` log)."""
+    if os.path.isfile(path):
+        return (path, set()) if _listed(os.path.basename(path)) else None
+    if not os.path.isdir(path) or os.path.exists(os.path.join(path, "_spark_metadata")):
+        return None
+    leaves, part_keys = [], set()
+    for root, dirs, files in os.walk(path, followlinks=True):
+        dirs[:] = [d for d in dirs if _listed(d)]
+        part_keys.update(d.split("=", 1)[0] for d in dirs if "=" in d)
+        leaves.extend(os.path.join(root, f) for f in files if _listed(f))
+    leaves.sort()
+    for summary in _SUMMARY_FILES:
+        for leaf in leaves:
+            if os.path.basename(leaf) == summary:
+                return leaf, part_keys
+    data = [leaf for leaf in leaves if os.path.basename(leaf) not in _SUMMARY_FILES]
+    return (data[0], part_keys) if data else None
+
+
+def _spark_type(t, nanos_as_long: bool, infer_ntz: bool) -> T.DataType | None:
+    """Spark's type for one Arrow type converted from a parquet schema
+    (``ParquetToSparkSchemaConverter``), for a small whitelist; ``None``
+    for everything else."""
+    import pyarrow as pa
+
+    if pa.types.is_boolean(t):
+        return T.BooleanType()
+    if pa.types.is_signed_integer(t):
+        return {8: T.ByteType(), 16: T.ShortType(), 32: T.IntegerType(), 64: T.LongType()}[
+            t.bit_width
+        ]
+    if pa.types.is_float32(t):
+        return T.FloatType()
+    if pa.types.is_float64(t):
+        return T.DoubleType()
+    if pa.types.is_string(t):
+        return T.StringType()
+    if pa.types.is_date32(t):
+        return T.DateType()
+    if pa.types.is_decimal128(t):
+        return T.DecimalType(t.precision, t.scale)
+    if pa.types.is_timestamp(t):
+        if t.unit == "us":
+            return T.TimestampNTZType() if t.tz is None and infer_ntz else T.TimestampType()
+        if t.unit == "ns" and nanos_as_long:
+            return T.LongType()
+        return None
+    if pa.types.is_list(t):
+        element = _spark_type(t.value_type, nanos_as_long, infer_ntz)
+        return None if element is None else T.ArrayType(element, t.value_field.nullable)
+    return None
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, resolved on
+    the driver from the same footer, or ``None`` when it cannot be
+    resolved exactly.
+
+    Without a schema Spark reads that one footer in a distributed job
+    (``mergeSchemasInParallel``, even with ``mergeSchema`` off) — about
+    0.1 s per read on a local master, whatever the table's size. Here the
+    footer is read with pyarrow: Spark's own row-metadata JSON is used
+    as-is, as Spark does; otherwise the parquet schema (not pyarrow's
+    stored ``ARROW:schema``) is mapped for integers, floats, booleans,
+    strings, dates, decimals, microsecond timestamps (``timestamp`` with
+    a zone, ``timestamp_ntz`` without), nanosecond timestamps as
+    ``bigint`` under ``spark.sql.legacy.parquet.nanosAsLong`` and lists
+    of those. Everything else — a non-local filesystem, a relative path
+    or a glob, a ``_spark_metadata`` sink log, no data file (an empty directory must
+    still raise), an INT96 or unmapped type, a data column that is also
+    a partition key, any read error — is ``None``."""
+    import json
+    from urllib.parse import urlparse
+
+    if any(c in path for c in "{}[]*?\\"):
+        return None
+    scheme = urlparse(path).scheme
+    if scheme == "file":
+        path = urlparse(path).path
+    elif scheme:
+        return None
+    else:
+        jvm_hadoop = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+        if not (jvm_hadoop.get("fs.defaultFS") or "file:").startswith("file:"):
+            return None
+    found = _footer_file(path) if os.path.isabs(path) else None
+    if found is None:
+        return None
+    footer, part_keys = found
+    try:
+        import pyarrow.parquet as pq
+
+        meta = pq.read_metadata(footer)
+        row_json = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+        if row_json is not None:
+            raw = json.loads(row_json)
+            schema = T.StructType.fromJson(raw)
+            # Only a schema that survives the Python round trip exactly.
+            if json.loads(schema.json()) != raw:
+                return None
+        else:
+            pschema = meta.schema
+            if any(
+                pschema.column(i).physical_type == "INT96" for i in range(len(pschema))
+            ):
+                return None
+            arrow = pschema.to_arrow_schema()
+            conf = spark.conf
+            nanos = conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true"
+            ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
+            fields = []
+            for field in arrow:
+                dtype = _spark_type(field.type, nanos, ntz)
+                if dtype is None:
+                    return None
+                fields.append(T.StructField(field.name, dtype, field.nullable))
+            schema = T.StructType(fields)
+    except Exception:  # noqa: BLE001 - any footer problem: let Spark infer
+        return None
+    names = {f.lower() for f in schema.fieldNames()}
+    if not schema.fields or names & {k.lower() for k in part_keys}:
+        return None
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job:
+    the schema comes from :func:`parquet_schema`, and where that cannot
+    resolve it the plain schema-inferring read runs, errors included."""
+    schema = parquet_schema(spark, path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
 #: (applicationId, sessionUUID, sf_dir, name) → DataFrame. A DataFrame
 #: is an immutable plan, so handing the same one to every caller is
 #: safe; the win is skipping the per-call file listing + parquet footer
@@ -75,6 +235,10 @@ _TABLE_CACHE: dict[tuple[str, str, str, str], DataFrame] = {}
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver-generated parquet table from a scale-factor dir.
+
+    The read goes through :func:`read_parquet`, so resolving the plan
+    runs no Spark job (the schema comes from the file's footer on the
+    driver), and the frame is memoized per session.
 
     ``events.ts`` has shipped as two different parquet physical types
     across driver generations, both normalized to a plain UTC
@@ -102,7 +266,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # again). Sibling sessions of the live app are kept.
     for stale in [k for k in _TABLE_CACHE if k[0] != app]:
         del _TABLE_CACHE[stale]
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
@@ -268,7 +432,7 @@ def compact_partition(
     backup = part.parent / _COMPACT_OLD / part.name
     shutil.rmtree(staging, ignore_errors=True)
     staging.parent.mkdir(parents=True, exist_ok=True)
-    df = spark.read.parquet(str(part))
+    df = read_parquet(spark, str(part))
     df.coalesce(n_files).write.mode("overwrite").parquet(str(staging))
     shutil.rmtree(backup, ignore_errors=True)
     backup.parent.mkdir(parents=True, exist_ok=True)

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from capital.io import read_parquet
 from capital.llm.text import normalized, tokens
 
 #: 2^32 — the hash-fraction denominator.
@@ -557,14 +558,14 @@ def semantic_contamination(
         from capital.llm.ivf import assign_cells
 
         spark = train.sparkSession
-        cents = spark.read.parquet(f"{via_ivf}/centroids").collect()
+        cents = read_parquet(spark, f"{via_ivf}/centroids").collect()
         centroids = [
             [float(x) for x in r.centroid]
             for r in sorted(cents, key=lambda r: r.cell)
         ]
         probe_n = len(centroids) if nprobe is None else int(nprobe)
         probed = assign_cells(c, centroids, vec_col="__cv", nprobe=probe_n)
-        bench_lists = spark.read.parquet(f"{via_ivf}/lists").select(
+        bench_lists = read_parquet(spark, f"{via_ivf}/lists").select(
             F.col("neighbor_id").alias("__bid"),
             F.col("c_vec").alias("__qv"),
             _norm(F.col("c_vec")).alias("__qn"),

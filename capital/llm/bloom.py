@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from capital.io import read_parquet
+
 #: Default filter size (2^20 bits = 16k words = 128 KB broadcast) and
 #: hash count — ~10 bits/key at 100k members → ~1% false positives.
 DEFAULT_M_BITS = 1 << 20
@@ -162,4 +164,4 @@ def write_bloom(words: DataFrame, path: str) -> None:
 
 
 def read_bloom(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)

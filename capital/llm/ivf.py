@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from capital.io import read_parquet
 from capital.llm.similarity import cosine
 
 
@@ -226,7 +227,7 @@ def probe_ivf_index(
     ≤ ``n_cells`` driver collect, traded deliberately for *static*
     pruning: the cell list must be literal before the scan plans.
     """
-    cents = spark.read.parquet(f"{path}/centroids").collect()
+    cents = read_parquet(spark, f"{path}/centroids").collect()
     centroids = [
         [float(x) for x in r.centroid]
         for r in sorted(cents, key=lambda r: r.cell)
@@ -242,7 +243,7 @@ def probe_ivf_index(
     probed = sorted(
         r.cell for r in q.select("cell").distinct().collect()
     )  # ≤ n_cells values
-    lists = spark.read.parquet(f"{path}/lists").filter(
+    lists = read_parquet(spark, f"{path}/lists").filter(
         F.col("cell").isin(probed)
     )
     scored = (

@@ -37,6 +37,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from capital.io import read_parquet
+
 #: Laplace smoothing pseudo-count.
 ALPHA = 1
 
@@ -296,11 +298,11 @@ def nb_load(spark, path: str) -> NBModel:
     """Read half of :func:`nb_save`."""
     import os
 
-    meta = spark.read.parquet(os.path.join(path, "meta")).collect()[0]
+    meta = read_parquet(spark, os.path.join(path, "meta")).collect()[0]
     row = meta.asDict()
     return NBModel(
-        token_counts=spark.read.parquet(os.path.join(path, "token_counts")),
-        label_stats=spark.read.parquet(os.path.join(path, "label_stats")),
+        token_counts=read_parquet(spark, os.path.join(path, "token_counts")),
+        label_stats=read_parquet(spark, os.path.join(path, "label_stats")),
         n_docs=int(row["n_docs"]),
         vocab_size=int(row["vocab_size"]),
         n_labels=int(row.get("n_labels", 0) or 0),

@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from capital.io import read_parquet
+
 #: Defaults: 64-dim vectors → 8 subspaces × 8 dims, 16 centroids each
 #: (4-bit codes; 8 codes pack into 32 bits of one long).
 PQ_M = 8
@@ -433,12 +435,12 @@ def probe_ivfpq_index(
     from capital.llm.similarity import cosine
 
     rerank = rerank or 8 * k
-    cents = spark.read.parquet(f"{path}/centroids").collect()
+    cents = read_parquet(spark, f"{path}/centroids").collect()
     centroids = [
         [float(x) for x in r.centroid]
         for r in sorted(cents, key=lambda r: r.cell)
     ]
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
+    cb_rows = read_parquet(spark, f"{path}/codebooks").collect()
     mm = 1 + max(r.subspace for r in cb_rows)
     kk = 1 + max(r.code for r in cb_rows)
     if (m, ks) != (mm, kk):
@@ -468,7 +470,7 @@ def probe_ivfpq_index(
         vec_col,
     ).select("query_id", "cell", F.col(vec_col).alias("q_vec"), "qtab")
     probed = sorted(r.cell for r in q.select("cell").distinct().collect())
-    lists = spark.read.parquet(f"{path}/lists").filter(
+    lists = read_parquet(spark, f"{path}/lists").filter(
         F.col("cell").isin(probed)
     )
     scored = (

@@ -48,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from capital.io import read_parquet
+
 #: BM25 hyperparameters (the canonical defaults).
 K1 = 1.2
 B = 0.75
@@ -485,7 +487,7 @@ def bm25_topk_stored(
         .collect()
     ]
     tfq = (
-        spark.read.parquet(f"{index_dir}/tf")
+        read_parquet(spark, f"{index_dir}/tf")
         .filter(F.col("pbucket").isin(pbuckets))
         .filter(F.col("token").isin(all_terms))
         .drop("batch_id", "pbucket")
@@ -497,7 +499,7 @@ def bm25_topk_stored(
         )
     else:
         dfreq = (
-            spark.read.parquet(f"{index_dir}/df")
+            read_parquet(spark, f"{index_dir}/df")
             .filter(F.col("token").isin(all_terms))
             .groupBy("token")
             .agg(F.sum("dfc").alias("dfc"))

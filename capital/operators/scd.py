@@ -32,6 +32,8 @@ import functools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from capital.io import read_parquet
+
 VALID_FROM = "valid_from"
 VALID_TO = "valid_to"
 
@@ -245,7 +247,7 @@ def scd2_apply_split(
 
     open_dir = pathlib.Path(path) / _OPEN
     closed_dir = f"{path}/{_CLOSED}"
-    open_rows = spark.read.parquet(str(open_dir))
+    open_rows = read_parquet(spark, str(open_dir))
     new_open, closed_now = _scd2_batch_delta(
         open_rows, updates, keys, tracked, batch_date
     )
@@ -277,13 +279,13 @@ def scd2_read_split(spark, path: str) -> DataFrame:
     prune closed partitions at plan time."""
     import pathlib
 
-    open_df = spark.read.parquet(f"{path}/{_OPEN}")
+    open_df = read_parquet(spark, f"{path}/{_OPEN}")
     closed_dir = pathlib.Path(path) / _CLOSED
     # No closed partitions yet (fresh table, or only no-op batches so
     # far — a no-op batch leaves just a _SUCCESS marker).
     if not any(closed_dir.glob(f"{VALID_TO}=*")):
         return open_df
-    closed = spark.read.parquet(str(closed_dir)).withColumn(
+    closed = read_parquet(spark, str(closed_dir)).withColumn(
         VALID_TO, F.col(VALID_TO).cast("date")
     )
     return open_df.unionByName(closed.select(*open_df.columns))

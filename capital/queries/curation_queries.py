@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from capital.io import load_table
+from capital.io import load_table, read_parquet
 from capital.queries.assemble_queries import _bucket_sql, _u_sql
 from capital.queries.registry import query
 
@@ -659,7 +659,7 @@ def drift_incremental_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline_histogram(e.filter(F.col("ts") < split), hour_bin).write.mode(
         "overwrite"
     ).parquet(path)
-    baseline = spark.read.parquet(path)
+    baseline = read_parquet(spark, path)
     # Current period as per-day micro-batch partials, folded like the
     # streaming state table (groupBy bin over per-batch histograms).
     partials = (

@@ -121,6 +121,48 @@ CLUSTER_CONF: dict[str, str] = {
 }
 
 
+def _cpus() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+#: Directory holding the ``capital`` package.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def builder_conf(
+    master: str | None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The conf :func:`get_spark` hands its session builder."""
+    conf: dict[str, str] = {}
+    if master and master.startswith("local"):
+        # In local mode the driver JVM *is* every executor: N task
+        # threads share one heap, and Spark's 1 GB default tips into
+        # heap OOM once a few corpus-sized frames are persisted
+        # (found by the 30× dedup scaling study). Static conf — takes
+        # effect only when this builder launches the JVM; on a real
+        # cluster spark-submit owns executor/driver sizing.
+        conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        # Python workers import from the JVM's working directory and
+        # the PYTHONPATH it inherited, not the driver's sys.path: a
+        # script started outside the package root fails on every
+        # Python UDF/mapInPandas with "No module named 'capital'".
+        # Spark merges this conf with the inherited PYTHONPATH, so it is
+        # set only when that path lacks the package root. On a cluster
+        # the package ships as pyFiles or an installed wheel instead.
+        inherited = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+        if PACKAGE_ROOT not in {os.path.abspath(p) for p in inherited if p}:
+            conf["spark.executorEnv.PYTHONPATH"] = PACKAGE_ROOT
+    conf.update(ENGINE_CONF)
+    conf["spark.sql.shuffle.partitions"] = str(
+        shuffle_partitions if shuffle_partitions is not None else _cpus()
+    )
+    if extra_conf:
+        conf.update(extra_conf)
+    return conf
+
+
 def get_spark(
     app_name: str = "capital",
     master: str | None = None,
@@ -134,33 +176,14 @@ def get_spark(
     cluster (where ``master`` is supplied by spark-submit and must be
     left unset).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = SparkSession.builder.appName(app_name)
     if master is None and not os.environ.get("SPARK_MASTER_OVERRIDE_EXTERNAL"):
-        master = f"local[{cpus}]"
+        master = f"local[{_cpus()}]"
     if master:
         builder = builder.master(master)
-    if master and master.startswith("local"):
-        # In local mode the driver JVM *is* every executor: N task
-        # threads share one heap, and Spark's 1 GB default tips into
-        # heap OOM once a few corpus-sized frames are persisted
-        # (found by the 30× dedup scaling study). Static conf — takes
-        # effect only when this builder launches the JVM; on a real
-        # cluster spark-submit owns executor/driver sizing.
-        builder = builder.config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
-    conf = dict(ENGINE_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(
-        shuffle_partitions if shuffle_partitions is not None else cpus
-    )
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    for k, v in builder_conf(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    return spark
+    return builder.getOrCreate()
 
 
 def session_cache_key(spark: SparkSession) -> tuple[str, str]:

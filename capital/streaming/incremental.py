@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from capital.io import read_parquet
+
 
 def read_prior_state(spark: SparkSession, path: str) -> DataFrame | None:
     """Read a durable per-batch state store, returning ``None`` ONLY
@@ -35,11 +37,17 @@ def read_prior_state(spark: SparkSession, path: str) -> DataFrame | None:
     score the batch against an empty prior and emit wrong flags with
     no error (round-11 advice). Spark 4 tags a truly-missing path
     ``PATH_NOT_FOUND``; everything else re-raises.
+
+    Read through :func:`capital.io.read_parquet`: a store's schema
+    comes from its first part file's footer on the driver, so a
+    per-micro-batch state read runs no schema-inference job. Missing
+    and empty directories take the plain inferring read, so they
+    behave exactly as above.
     """
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     except AnalysisException as exc:
         cond = exc.getCondition() if hasattr(exc, "getCondition") else None
         if cond == "PATH_NOT_FOUND":
@@ -446,7 +454,7 @@ def psi_state_terms(
     stream-vs-batch equality test pins that."""
     from capital.operators.drift import psi_counts_against_baseline
 
-    state = spark.read.parquet(state_dir)
+    state = read_parquet(spark, state_dir)
     cur_counts = state.groupBy("bin").agg(
         F.sum("n_cur").alias("n_cur")
     )
@@ -467,7 +475,7 @@ def ks_state_terms(
     (the KS contract); PSI covers unordered categoricals."""
     from capital.operators.drift import ks_counts_against_baseline
 
-    state = spark.read.parquet(state_dir)
+    state = read_parquet(spark, state_dir)
     cur_counts = state.groupBy("bin").agg(
         F.sum("n_cur").alias("n_cur")
     )
@@ -545,7 +553,7 @@ def funnel_state_conversion(
     fold only ever scans funnel-step events."""
     from capital.operators.funnel import funnel_conversion
 
-    state = spark.read.parquet(state_dir).dropDuplicates(
+    state = read_parquet(spark, state_dir).dropDuplicates(
         [user_col, type_col, ts_col]
     )
     return funnel_conversion(
@@ -662,7 +670,7 @@ def bloom_state_words(spark: SparkSession, state_dir: str) -> DataFrame:
     it to ``bloom_might_contain``/``bloom_prefilter`` as the stored
     index."""
     return (
-        spark.read.parquet(state_dir)
+        read_parquet(spark, state_dir)
         .groupBy("word_idx")
         .agg(F.bit_or("word").alias("word"))
     )
@@ -769,7 +777,7 @@ def incremental_lines_run(
 def lines_state_lines(spark: SparkSession, state_dir: str) -> DataFrame:
     """Read half: the accumulated distinct-line index (order-free
     distinct union of the batch partitions)."""
-    return spark.read.parquet(state_dir).select("__line").distinct()
+    return read_parquet(spark, state_dir).select("__line").distinct()
 
 
 def incremental_kmeans_run(
@@ -877,7 +885,7 @@ def kmeans_state_centroids(
     from capital.llm.text import round6_stable
 
     rows = (
-        spark.read.parquet(state_dir)
+        read_parquet(spark, state_dir)
         .groupBy("cell", "__i")
         .agg(F.sum("sum_micro").alias("s"), F.sum("n").alias("n"))
         .select(
@@ -1255,7 +1263,7 @@ def incremental_curation_run(
         from capital.llm.text import with_pii_scrub
 
         model = nb_load(spark, model_dir)
-        bench = spark.read.parquet(bench_path)
+        bench = read_parquet(spark, bench_path)
         work = batch_df.filter(
             F.col("doc_id") % V2_BENCH_MOD != 0
         )

@@ -8,10 +8,11 @@ that, so under the default every repeated round recompiled every
 class. ``capital.session.ENGINE_CONF`` sizes the cache to the
 engine's plan working set; this test pins that a second pass of the
 same queries, with the engine's plan and data caches cleared, compiles
-(almost) nothing. Not exactly nothing: a few generated classes differ
-from run to run (``ts_regularize_ffill`` recompiles ~4 per run with an
-unbounded cache too), so the bound is a handful, against ~170 under
-Spark's default.
+(almost) nothing. Not exactly nothing: generated class names embed
+the whole-stage stage id (``GeneratedIteratorForCodegenStage<N>``), so
+the same pipeline planned at another stage id is a different cache key
+and recompiles (``ts_regularize_ffill`` ~4 per run with an unbounded
+cache too). The bound is a handful, against ~170 under Spark's default.
 """
 
 from __future__ import annotations
