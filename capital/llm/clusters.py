@@ -10,8 +10,13 @@ pair graph, computed here with iterative min-label propagation:
 repeated to fixpoint. Every vertex converges to the smallest doc id in
 its component, which doubles as the canonical-survivor id.
 
-Scale notes (the reason this is iterative DataFrame joins, not a
-driver-side union-find over ``collect()``):
+Scale notes. A pair graph of at most ``DRIVER_CLOSURE_MAX_PAIRS``
+edges (blocked near-dup graphs after the gates: tens of edges per
+thousand documents) closes on the driver: :func:`remove_duplicates`
+collects it in one action, runs a min-id union-find, and filters the
+corpus with one ``IN`` predicate. Larger graphs close with the
+iterative DataFrame joins below, so a lake-sized graph never reaches
+the driver:
 
 - Each round is one shuffle join (edges ⋈ labels on the edge source)
   plus one groupBy — both on the pair graph, which is orders of
@@ -43,6 +48,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MAX_ROUNDS = 25
+#: Pair graphs with at most this many edges close on the driver
+#: (:func:`remove_duplicates`); one collect of K+1 rows decides.
+DRIVER_CLOSURE_MAX_PAIRS = 10_000
 
 
 def _edge_vertex_labels(
@@ -241,3 +249,73 @@ def deduplicated_corpus(
     return df.filter(F.col(id_col).isNotNull()).join(
         dropped, id_col, "left_anti"
     )
+
+
+def _min_id_drops(edges) -> set:
+    """Driver-side min-id closure: the vertices of ``edges`` whose
+    component's min id is not their own — the same set
+    :func:`duplicate_drop_ids` derives. An edge with a NULL endpoint
+    joins nothing there, so it is skipped here."""
+    parent: dict = {}
+
+    def find(v):
+        root = v
+        while parent[root] != root:
+            root = parent[root]
+        while parent[v] != root:
+            parent[v], v = root, parent[v]
+        return root
+
+    for a, b in edges:
+        if a is None or b is None:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v for v in parent if find(v) != v}
+
+
+def remove_duplicates(
+    df: DataFrame,
+    pairs: DataFrame,
+    id_col: str = "doc_id",
+    barrier=None,
+) -> DataFrame:
+    """``df`` without the non-survivors of the pair graph's min-id
+    closure: the anti-join of ``df`` against
+    :func:`duplicate_drop_ids`, with NULL ids kept as that anti-join
+    keeps them.
+
+    One action collects at most ``DRIVER_CLOSURE_MAX_PAIRS + 1``
+    pairs. No pair: ``df`` unchanged. Up to the bound: the closure
+    runs on the driver and the drop set becomes ONE ``IN`` predicate
+    built as a single SQL expression (Spark plans it as an InSet;
+    ``Column.isin(list)`` pays one py4j call per id). Over the bound,
+    or for non-integer ids: the iterative closure, its drop set
+    passed through ``barrier`` (the caller's materialization, e.g. a
+    plan checkpointer) and anti-joined. ``pairs`` is read twice on
+    that path, so a caller should pass it materialized."""
+    # toArrow, not collect(): collect() runs a limit as incremental
+    # take jobs (1, 4, 16... partitions, and then one more to fill a
+    # lazy checkpoint); toArrow reads every partition, each limited
+    # locally, in one job.
+    t = pairs.select("id_a", "id_b").limit(
+        DRIVER_CLOSURE_MAX_PAIRS + 1
+    ).toArrow()
+    edges = list(zip(t["id_a"].to_pylist(), t["id_b"].to_pylist()))
+    if not edges:
+        return df
+    if len(edges) <= DRIVER_CLOSURE_MAX_PAIRS and all(
+        type(v) is int for e in edges for v in e if v is not None
+    ):
+        drops = sorted(_min_id_drops(edges))
+        if not drops:
+            return df
+        in_drop = F.expr(f"`{id_col}` IN ({', '.join(map(str, drops))})")
+        return df.filter(~F.coalesce(in_drop, F.lit(False)))
+    dropped = duplicate_drop_ids(pairs, id_col=id_col)
+    if barrier is not None:
+        dropped = barrier(dropped)
+    return df.join(dropped, id_col, "left_anti")

@@ -23,11 +23,22 @@ score against class ``l`` is
 
     ln(prior_l) + Σ_seen tf·lp_l(cnt) + (N_doc − seen_tf)·lp_l(0)
 
-with ``lp_l(c) = round(ln((c + α) / (total_l + α·V)), 6)`` — so the
-ONLY join is doc-tokens × the class-token table on the token (inner;
-each probe row matches ≤ |labels| aggregate rows), followed by a
-labels-sized broadcast grid. Nothing enumerates (doc × vocab), and
-the model is vocabulary-sized state, never corpus-sized.
+with ``lp_l(c) = round(ln((c + α) / (total_l + α·V)), 6)``, so nothing
+enumerates (doc × vocab) and the model is vocabulary-sized state,
+never corpus-sized. Two shapes evaluate it, chosen by the model's
+size against ``autoBroadcastJoinThreshold``:
+
+- **Bounded model (the norm):** the lp terms are computed in Spark and
+  collected once, then every document is scored in ONE narrow Arrow
+  ``mapInArrow`` kernel over Spark's own token arrays — no exchange,
+  no join, no window. The kernel sums the round-6 terms as exact
+  integers (the value ``decimal_sum`` gives), applies the same
+  three-term addition and ``round6_stable``, and takes the argmax
+  (score6 desc, label asc): bit-identical to the plan below.
+- **Lake-sized model:** the one join is doc-tokens × the class-token
+  table on the token (inner; each probe row matches ≤ |labels|
+  aggregate rows), followed by a labels-sized broadcast grid and a
+  window argmax.
 """
 
 from __future__ import annotations
@@ -59,12 +70,7 @@ class NBModel:
     n_labels: int = 0
 
 
-def _doc_tokens(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    partition_by_id: bool = False,
-) -> DataFrame:
+def _doc_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, token, tf) over normalized tokens (the lang-ID twin) —
     the ONE tokenize definition train and classify share (a private
     classify-side copy would let the two silently diverge; round-16
@@ -76,27 +82,20 @@ def _doc_tokens(
     barrier): plain 3.0 s vs +localCheckpoint 3.9 s at sf0.1. At lake
     scale the duplicate passes are a throughput cost on the scan
     side; a caller chaining several classifications should persist
-    its own doc-token frame and pass it through a custom flow.
-
-    ``partition_by_id``: the classify-side partition-reuse shape
-    (round 16) — one upfront id exchange that the tf aggregate and
-    every downstream id-keyed stage reuse. Only worth it when the
-    class-token join broadcasts (otherwise the token-keyed shuffle
-    destroys the layout and the plain groupBy exchange is strictly
-    cheaper — it ships map-side-combined partials, the repartition
-    ships raw token rows)."""
-    from capital.llm.text import normalized, tokens
-
-    ex = df.select(
-        F.col(id_col),
-        F.explode(tokens(normalized(F.col(text_col)))).alias("__tok"),
-    )
-    if partition_by_id:
-        ex = ex.repartition(F.col(id_col))
+    its own doc-token frame and pass it through a custom flow."""
     return (
-        ex.groupBy(id_col, "__tok")
+        df.select(
+            F.col(id_col), F.explode(_token_array(text_col)).alias("__tok")
+        )
+        .groupBy(id_col, "__tok")
         .agg(F.count(F.lit(1)).alias("__tf"))
     )
+
+
+def _token_array(text_col: str):
+    from capital.llm.text import normalized, tokens
+
+    return tokens(normalized(F.col(text_col)))
 
 
 def nb_train(
@@ -137,12 +136,15 @@ def nb_train(
     # into idle task slots), so train pays one serial job floor, not
     # two. overlapped_job joins the worker on any exit, so a failing
     # metadata aggregate cannot leave the label count running
-    # (round 17).
+    # (round 17). The label count is the size of one label set:
+    # class labels are few, so the set merges in one exchange where
+    # count_distinct plans two (one job fewer; NULL is skipped either
+    # way).
     from capital.io import overlapped_job
 
     with overlapped_job(
         lambda: labels.agg(
-            F.count_distinct("__label").alias("L")
+            F.size(F.collect_set("__label")).alias("L")
         ).collect()[0]["L"]
     ) as labels_future:
         meta = dt.agg(
@@ -165,47 +167,33 @@ def nb_classify(
     text_col: str = "text",
     id_col: str = "doc_id",
     alpha: float = ALPHA,
+    keep_input: bool = False,
 ) -> DataFrame:
     """Score every document against every class and emit the argmax:
     ``(id, nb_pred, score6)`` — score6 the winner's rounded
-    log-posterior (up to the shared constant −Σ ln tf!)."""
-    from capital.llm.text import round6_stable
-    from capital.queries.registry import decimal_sum
+    log-posterior (up to the shared constant −Σ ln tf!).
+    ``keep_input=True`` returns every column of ``df`` followed by
+    ``nb_pred, score6`` instead (the bounded kernel passes its input
+    through, so a caller needs no ``df ⋈ pred`` join). Documents with
+    no token (NULL text) get no row either way. Ids are unique
+    (the corpus contract)."""
+    from capital.io import _parse_bytes
 
     a = F.lit(float(alpha))
     v = F.lit(float(model.vocab_size))
-    denom = F.col("__total_tf").cast("double") + a * v
-    lstats = model.label_stats.select(
-        "__label",
-        F.round(
-            F.log(F.col("__n_docs").cast("double") / F.lit(float(model.n_docs))),
-            6,
-        ).alias("__lp_prior"),
-        F.round(F.log(a / denom), 6).alias("__lp0"),
-    )
-    lp_cnt = F.round(
-        F.log(
-            (F.col("__cnt").cast("double") + a)
-            / (F.col("__total_tf").cast("double") + a * v)
-        ),
+    total = F.col("__total_tf").cast("double")
+    lp_prior = F.round(
+        F.log(F.col("__n_docs").cast("double") / F.lit(float(model.n_docs))),
         6,
-    )
-    # per-label token log-likelihoods carry their label's denominator.
-    ct = model.token_counts.join(
-        model.label_stats.select("__label", "__total_tf"), "__label"
-    ).select("__label", "__tok", lp_cnt.alias("__lp"))
+    ).alias("__lp_prior")
+    lp0 = F.round(F.log(a / (total + a * v)), 6).alias("__lp0")
+    lp_cnt = F.round(
+        F.log((F.col("__cnt").cast("double") + a) / (total + a * v)), 6
+    ).alias("__lp")
 
-    # Partitioning-reuse (round 16, the r13 HashPartitioning-superset
-    # rule): ONE upfront hash exchange on the doc id serves the
-    # (id, tok) tf aggregate, the (id, label) seen aggregate, the
-    # per-id total, the grid join AND the argmax window with zero
-    # re-exchange — provided the class-token table joins in as a
-    # broadcast. The model-sized decision is priced like pagerank's
-    # state broadcast: <= n_labels x vocab_size rows x ~48 B against
-    # autoBroadcastJoinThreshold; a lake-sized vocab falls back to
-    # the token-keyed shuffle join exactly as the old plan did.
-    from capital.io import _parse_bytes
-
+    # The model-sized decision is priced like pagerank's state
+    # broadcast: <= n_labels x vocab_size rows x ~48 B against
+    # autoBroadcastJoinThreshold.
     thresh = _parse_bytes(
         df.sparkSession.conf.get(
             "spark.sql.autoBroadcastJoinThreshold", "10MB"
@@ -213,14 +201,38 @@ def nb_classify(
     )
     ct_bytes = model.n_labels * model.vocab_size * 48
     bcast_ok = model.n_labels > 0 and 0 < ct_bytes < max(thresh, 0)
-    # partition_by_id only when the model broadcasts: otherwise the
-    # token-keyed shuffle join destroys the id layout anyway and the
-    # fallback must be the EXACT pre-round-16 plan (round-16 review —
-    # an unconditional repartition ships raw un-combined token rows
-    # on top of the old exchanges).
-    dt = _doc_tokens(df, id_col, text_col, partition_by_id=bcast_ok)
+    if bcast_ok:
+        # Every label of label_stats has token rows (both frames
+        # aggregate the same labeled tokens), so one null-safe join
+        # carries each label's prior and unseen terms to the driver;
+        # the kernel drops the NULL label's seen rows, which the
+        # equi-join below never matches.
+        stats = model.label_stats.select(
+            F.col("__label").alias("__slabel"), "__total_tf", "__n_docs"
+        )
+        terms = model.token_counts.join(
+            F.broadcast(stats),
+            F.col("__label").eqNullSafe(F.col("__slabel")),
+        ).select("__label", "__tok", lp_cnt, lp_prior, lp0)
+        return _score_narrow(df, terms, text_col, id_col, keep_input)
+
+    lstats = model.label_stats.select("__label", lp_prior, lp0)
+    # per-label token log-likelihoods carry their label's denominator.
+    ct = model.token_counts.join(
+        model.label_stats.select("__label", "__total_tf"), "__label"
+    ).select("__label", "__tok", lp_cnt)
+
+    # Lake-sized model: the token-keyed shuffle join, grid and window.
+    # A bounded model never takes this plan: each of its AQE stages is
+    # one more job, which the narrow kernel does not pay (with the
+    # driver-side duplicate closure, the curation funnel runs 35 jobs
+    # instead of 65, rows identical).
+    from capital.llm.text import round6_stable
+    from capital.queries.registry import decimal_sum
+
+    dt = _doc_tokens(df, id_col, text_col)
     seen = (
-        dt.join(F.broadcast(ct) if bcast_ok else ct, "__tok")
+        dt.join(ct, "__tok")
         .groupBy(id_col, "__label")
         .agg(
             decimal_sum(
@@ -230,15 +242,6 @@ def nb_classify(
         )
     )
     ndoc = dt.groupBy(id_col).agg(F.sum("__tf").cast("long").alias("__n"))
-    # Grid + window argmax (kept over the literal-stats projection
-    # rewrite, round 16, measured-negative ledger: collecting the
-    # labels-sized lstats bakes the argmax into one projection and
-    # removes the grid SMJ's two (id, label) exchanges + the window
-    # exchange — but for IN-CALL models the collect re-executes the
-    # whole corpus-side label_stats pipeline as an extra eager job,
-    # 2.20 -> 2.67 s at sf0.1. Net negative until models are stored;
-    # a stored-model-only fast path would add a second parity
-    # surface for ~0.5 s — not taken).
     grid = ndoc.crossJoin(F.broadcast(lstats))
     scored = (
         grid.join(seen, [id_col, "__label"], "left")
@@ -263,7 +266,7 @@ def nb_classify(
     w = Window.partitionBy(id_col).orderBy(
         F.desc("__score6"), F.asc("__label")
     )
-    return (
+    pred = (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select(
@@ -272,6 +275,112 @@ def nb_classify(
             F.col("__score6").alias("score6"),
         )
     )
+    return df.join(pred, id_col) if keep_input else pred
+
+
+def _score_narrow(
+    df: DataFrame,
+    terms: DataFrame,
+    text_col: str,
+    id_col: str,
+    keep_input: bool,
+) -> DataFrame:
+    """The bounded-model shape of :func:`nb_classify`: collect the lp
+    terms ``(label, token, lp, lp_prior, lp0)`` in one action and
+    score each document in one Arrow kernel over
+    ``tokens(normalized(text))`` as Spark computes it. The model ships
+    by closure capture, as ``assemble.decontaminate_spans`` ships its
+    gram set: the task binary is broadcast once per stage, and nothing
+    driver-pinned outlives the plan.
+
+    Bit-identity with the shuffle plan: each ``lp`` is a round-6
+    double, so ``q = round(lp·10⁶)`` is its exact integer and
+    ``CAST(tf·lp AS DECIMAL(28,6))`` is exactly ``tf·q`` micro-units
+    (the product's error is far below half a micro-unit), so the
+    decimal sum is the integer ``Σ tf·q`` and its cast to double is
+    the correctly rounded ``Σ tf·q / 10⁶``, which Python's int / int
+    division gives. The three-term addition, ``round6_stable``
+    (``floor(x·10⁶ + 0.5) / 10⁶``) and the argmax order are the
+    plan's own IEEE operations."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from capital.io import parallelize_narrow
+
+    t = terms.toArrow().to_pydict()
+    # Spark's ascending order puts NULL first; ties keep the earlier
+    # label, so iterating in this order is the (score6 desc, label
+    # asc) argmax.
+    labels = sorted(
+        set(t["__label"]), key=lambda lab: (lab is not None, lab)
+    )
+    index = {lab: i for i, lab in enumerate(labels)}
+    prior = [0.0] * len(labels)
+    lp0 = [0.0] * len(labels)
+    seen: dict = {}
+    for lab, tok, lp, lp_p, lp_0 in zip(
+        t["__label"], t["__tok"], t["__lp"], t["__lp_prior"], t["__lp0"]
+    ):
+        i = index[lab]
+        prior[i], lp0[i] = lp_p, lp_0
+        if lab is not None:
+            seen.setdefault(tok, []).append((i, round(lp * 1e6)))
+
+    cols = df.columns if keep_input else [id_col]
+    src = parallelize_narrow(
+        df.select(*cols, _token_array(text_col).alias("__toks"))
+    )
+    label_type = terms.schema["__label"].dataType
+    out_schema = StructType(
+        [df.schema[c] for c in cols]
+        + [
+            StructField("nb_pred", label_type),
+            StructField("score6", DoubleType()),
+        ]
+    )
+    n_labels, n_cols = len(labels), len(cols)
+    pred_type = to_arrow_type(label_type)
+
+    def _score(batches):
+        import math
+        from collections import Counter
+
+        import pyarrow as pa
+
+        for batch in batches:
+            rows, preds, scores = [], [], []
+            for row, toks in enumerate(batch.column(n_cols).to_pylist()):
+                if not toks or not n_labels:
+                    continue  # NULL text or no class: no grid row
+                seen_q = [0] * n_labels
+                seen_tf = [0] * n_labels
+                for tok, tf in Counter(toks).items():
+                    for i, q in seen.get(tok, ()):
+                        seen_q[i] += tf * q
+                        seen_tf[i] += tf
+                best, best_s = 0, None
+                for i in range(n_labels):
+                    x = (
+                        prior[i] + seen_q[i] / 1_000_000
+                        + float(len(toks) - seen_tf[i]) * lp0[i]
+                    )
+                    s6 = math.floor(x * 1000000.0 + 0.5) / 1000000.0
+                    if best_s is None or s6 > best_s:
+                        best, best_s = i, s6
+                rows.append(row)
+                preds.append(labels[best])
+                scores.append(best_s)
+            take = pa.array(rows, pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(j).take(take) for j in range(n_cols)]
+                + [
+                    pa.array(preds, pred_type),
+                    pa.array(scores, pa.float64()),
+                ],
+                names=out_schema.names,
+            )
+
+    return src.mapInArrow(_score, schema=out_schema)
 
 
 def nb_save(model: NBModel, path: str) -> None:

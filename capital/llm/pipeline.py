@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from capital.llm.clusters import duplicate_drop_ids
+from capital.io import plan_checkpointer
+from capital.llm.clusters import remove_duplicates
 from capital.llm.dedup import verified_neardup_pairs
 from capital.llm.text import (
     with_pii_scrub,
@@ -78,24 +79,22 @@ def clean_corpus(
     else:
         kept = _kept
 
-    pairs = verified_neardup_pairs(
-        kept,
-        num_hashes=num_hashes,
-        bands=bands,
-        rows_per_band=rows_per_band,
-        threshold=jaccard_threshold,
+    # Barriered: remove_duplicates collects the graph, and a graph
+    # over its driver bound is read again by the iterative closure.
+    pairs = plan_checkpointer(kept.sparkSession, None)(
+        verified_neardup_pairs(
+            kept,
+            num_hashes=num_hashes,
+            bands=bands,
+            rows_per_band=rows_per_band,
+            threshold=jaccard_threshold,
+        )
     )
-    # Min-id survivorship via the PAIR-GRAPH-sized drop set (round 17):
-    # the closure label already IS the component's min member id, so
-    # the old corpus-sized component_summary groupBy + keeper semi-join
-    # re-derived keep_id through a full corpus exchange. Anti-joining
-    # the (tiny, broadcastable) dropped ids is output-identical on the
-    # non-null-id corpus (NULL ids drop in _gate_survivors) —
-    # survivors = kept \ {v in pair graph : label(v) != v}.
-    dropped = duplicate_drop_ids(pairs)
+    # Min-id survivorship (clusters.remove_duplicates): the survivors
+    # are kept \ {v in pair graph : label(v) != v}, closed on the
+    # driver for a small graph. NULL ids drop in _gate_survivors.
     return (
-        with_pii_scrub(kept)
-        .join(dropped, "doc_id", "left_anti")
+        remove_duplicates(with_pii_scrub(kept), pairs)
         .select(
             "doc_id",
             "n_tokens",

@@ -15,15 +15,18 @@ round-13–15 operator tiers:
 
 Every stage is one of the engine's independently-oracled operators;
 this module only composes them, so the funnel inherits each stage's
-scale posture: the extraction/decontamination stages are shuffle-free
-per-document kernels, the gates are narrow projections, the dedup
-tiers shuffle blocked pair spaces (never O(n²)), and the NB model /
-benchmark-gram state is bounded (vocabulary/eval-suite-sized) by
-construction. The DuckDB oracle for the composed pipeline is built
-from the same SQL fragments as the per-operator oracles
-(``capital/queries/pipeline_v2_queries.py``), so the whole funnel is
-hash-checked end to end — the proof that the tiers' fixture and
-tokenizer conventions compose.
+scale posture: the extraction/decontamination stages and the NB
+language gate are shuffle-free per-document kernels, the other gates
+are narrow projections, the dedup tiers shuffle blocked pair spaces
+(never O(n²)), and the NB model / benchmark-gram state is bounded
+(vocabulary/eval-suite-sized) by construction. The pair graph is
+collected once: empty, it leaves the corpus as is; small, it closes
+on the driver into one ``IN`` filter; over the driver bound, it takes
+the iterative closure (``clusters.remove_duplicates``). The DuckDB
+oracle for the composed pipeline is built from the same SQL fragments
+as the per-operator oracles (``capital/queries/pipeline_v2_queries.py``),
+so the whole funnel is hash-checked end to end — the proof that the
+tiers' fixture and tokenizer conventions compose.
 
 Fixture composition: the driver corpus is single-line synthetic text,
 so the pipeline renders each document through BOTH fixture
@@ -155,8 +158,7 @@ def gate_flags(work: DataFrame, nb_model=None, barrier=None):
 
     c0 = extract_corpus(work, barrier=barrier)
     model = nb_model or nb_train(c0.select("doc_id", "lang", "text"))
-    pred = nb_classify(c0, model)
-    flagged = c0.join(pred.select("doc_id", "nb_pred"), "doc_id")
+    flagged = nb_classify(c0, model, keep_input=True)
     flagged = gopher_quality_flags(
         flagged, text_col="text", rules=V2_GOPHER_OVERRIDES
     )
@@ -183,9 +185,10 @@ def curation_v2_stages(
     composition.
 
     Materialization: the extraction output, the C4-surviving corpus,
-    the line-deduped corpus, and the survivor id set are each consumed
-    by >=2 downstream stages (the round-9 multi-reference rule) and
-    are BARRIERED via :func:`capital.io.plan_checkpointer`, not
+    the line-deduped corpus, the pair graph, and (over the driver
+    closure bound) the drop id set are each consumed by >=2
+    downstream stages (the round-9 multi-reference rule) and are
+    BARRIERED via :func:`capital.io.plan_checkpointer`, not
     persist(): a funnel-deep lineage makes every downstream action
     re-canonicalize the whole tree for the cache lookup, which
     measured 60s -> 18s at sf0.01 when the four persists became
@@ -196,7 +199,7 @@ def curation_v2_stages(
     from capital.io import overlapped_job, plan_checkpointer
     from capital.llm.assemble import bench_gram_set, decontaminate_spans
     from capital.llm.c4 import line_dedup_flags
-    from capital.llm.clusters import duplicate_drop_ids
+    from capital.llm.clusters import remove_duplicates
     from capital.llm.dedup import verified_neardup_pairs
     from capital.llm.text import with_pii_scrub
 
@@ -238,26 +241,13 @@ def curation_v2_stages(
             )
         )
 
-        # Materialize the verified pair graph once, then short-circuit:
-        # an empty graph (the common case after the gates on clean
-        # corpora) means every document is its own component — the
-        # iterative closure's ~8 fixed jobs buy nothing. Driver-side
-        # branch on a checkpointed 1-row probe (the P11
-        # plain-control-flow posture; components output for an empty
-        # graph is provably the identity, so the branch cannot change
-        # results).
+        # Materialize the verified pair graph once; remove_duplicates
+        # collects it (up to its driver bound) in one action: an empty
+        # graph leaves the corpus as is, a small one closes on the
+        # driver into one IN filter, a large one takes the iterative
+        # closure with its drop set checkpointed.
         pairs = ckpt(verified_neardup_pairs(c4d, scope=scope, **V2_MH))
-        if len(pairs.limit(1).take(1)) == 0:
-            c5 = c4d
-        else:
-            # Min-id survivorship via the PAIR-GRAPH-sized drop set
-            # (round 17): the closure label IS the component's min
-            # member id, so the old corpus-sized component_summary
-            # groupBy + keeper semi-join re-derived keep_id through a
-            # full corpus exchange; anti-joining the tiny dropped set
-            # is output-identical on the non-null-id corpus.
-            dropped = ckpt(duplicate_drop_ids(pairs))
-            c5 = c4d.join(dropped, "doc_id", "left_anti")
+        c5 = remove_duplicates(c4d, pairs, barrier=ckpt)
 
         decon = decontaminate_spans(
             c5, bench_raw, k=V2_DECON_K, with_text=True,

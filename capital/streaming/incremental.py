@@ -35,24 +35,22 @@ def read_prior_state(spark: SparkSession, path: str) -> DataFrame | None:
     mismatch, a mixed-layout store — is state corruption and MUST
     propagate: a blanket ``except AnalysisException`` would silently
     score the batch against an empty prior and emit wrong flags with
-    no error (round-11 advice). Spark 4 tags a truly-missing path
-    ``PATH_NOT_FOUND``; everything else re-raises.
+    no error (round-11 advice).
 
-    Read through :func:`capital.io.read_parquet`: a store's schema
-    comes from its first part file's footer on the driver, so a
-    per-micro-batch state read runs no schema-inference job. Missing
-    and empty directories take the plain inferring read, so they
-    behave exactly as above.
+    Existence is checked on the driver through the path's Hadoop
+    FileSystem, so a missing store runs no Spark read (which logged a
+    ``FileStreamSink`` WARN with a full stack trace on every first
+    micro-batch). An existing store is read through
+    :func:`capital.io.read_parquet`: its schema comes from the first
+    part file's footer on the driver, so a per-micro-batch state read
+    runs no schema-inference job. An empty directory takes the plain
+    inferring read and raises.
     """
-    from pyspark.errors import AnalysisException
-
-    try:
-        return read_parquet(spark, path)
-    except AnalysisException as exc:
-        cond = exc.getCondition() if hasattr(exc, "getCondition") else None
-        if cond == "PATH_NOT_FOUND":
-            return None
-        raise
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    if not fs.exists(jpath):
+        return None
+    return read_parquet(spark, path)
 
 
 def incremental_run(

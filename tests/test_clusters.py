@@ -9,6 +9,8 @@ logic, not just one join).
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from capital.llm.clusters import (
@@ -232,3 +234,72 @@ def test_lsh_candidate_ids_matches_pairs(spark):
         for r in lsh_candidate_ids(sigs, bands=4, rows_per_band=4).collect()
     )
     assert ids == full
+
+
+# --- remove_duplicates: driver closure vs the iterative closure ------
+
+_PLANTED = {
+    "star": [(0, i) for i in range(1, 12)],
+    # a 71-vertex chain: label propagation alone needs ~70 rounds
+    # (MAX_ROUNDS is 25), so the iterative side converges only through
+    # pointer jumping
+    "chain": [(i + 1, i) for i in range(40, 110)],
+    "two_components": [(5, 9), (9, 2), (30, 31), (31, 33), (33, 30)],
+    "reversed_and_duplicate": [(9, 4), (4, 9), (4, 9), (7, 4), (7, 7), (12, 7)],
+}
+
+
+def _drop_sets(spark, edges):
+    """(driver drop set, distributed drop set) for one edge list."""
+    from capital.llm.clusters import _min_id_drops, duplicate_drop_ids
+
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    dist = {r.doc_id for r in duplicate_drop_ids(pairs).collect()}
+    return _min_id_drops(edges), dist
+
+
+@pytest.mark.parametrize("graph", sorted(_PLANTED))
+def test_remove_duplicates_driver_matches_iterative(spark, monkeypatch, graph):
+    """Both sides of the driver bound give the same survivors: the
+    driver union-find + IN filter, and (bound patched to 0) the
+    iterative closure + anti-join."""
+    import capital.llm.clusters as cl
+
+    edges = _PLANTED[graph]
+    driver, dist = _drop_sets(spark, edges)
+    assert driver == dist and driver
+
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    corpus = spark.createDataFrame(
+        [(i,) for i in range(120)] + [(None,)], "doc_id long"
+    )
+    small = cl.remove_duplicates(corpus, pairs)
+    assert "Join" not in small._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    monkeypatch.setattr(cl, "DRIVER_CLOSURE_MAX_PAIRS", 0)
+    big = cl.remove_duplicates(corpus, pairs)
+    got_small = sorted(map(tuple, small.collect()), key=repr)
+    assert got_small == sorted(map(tuple, big.collect()), key=repr)
+    assert (None,) in got_small  # NULL ids stay, as the anti-join keeps them
+
+
+def test_remove_duplicates_without_pairs_is_identity(spark):
+    from capital.llm.clusters import remove_duplicates
+
+    corpus = spark.range(5).withColumnRenamed("id", "doc_id")
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    assert remove_duplicates(corpus, pairs) is corpus
+
+
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 25), st.integers(0, 25)), max_size=30
+    )
+)
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_driver_closure_matches_iterative_on_random_graphs(spark, edges):
+    driver, dist = _drop_sets(spark, edges)
+    assert driver == dist

@@ -102,3 +102,93 @@ def test_nb_save_load_roundtrip_identical(spark, tmp_path):
     a = sorted(map(tuple, nb_classify(train, model).collect()))
     b = sorted(map(tuple, nb_classify(train, loaded).collect()))
     assert a == b
+
+
+# --- both scoring shapes: narrow kernel vs token-keyed shuffle -------
+
+
+def _both_shapes(spark, df, model, **kw):
+    """``nb_classify`` rows on the narrow kernel (the model fits
+    autoBroadcastJoinThreshold) and on the shuffle plan (threshold
+    -1), plus each shape's physical plan."""
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    out = []
+    for thresh in (None, "-1"):
+        prev = spark.conf.get(conf)
+        if thresh is not None:
+            spark.conf.set(conf, thresh)
+        try:
+            res = nb_classify(df, model, **kw)
+            plan = res._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+            out.append((sorted(map(tuple, res.collect())), plan))
+        finally:
+            spark.conf.set(conf, prev)
+    (narrow, narrow_plan), (shuffle, shuffle_plan) = out
+    assert "MapInArrow" in narrow_plan and "Window" not in narrow_plan
+    assert "MapInArrow" not in shuffle_plan
+    return narrow, shuffle
+
+
+def test_nb_kernel_matches_shuffle_plan_on_corpus(spark, sf_dir):
+    """Resubstitution over the test corpus: identical (id, nb_pred,
+    score6) rows, bit for bit, from both shapes — and with
+    ``keep_input`` the input columns ride through unchanged."""
+    from capital.io import load_table
+
+    d = load_table(spark, sf_dir, "documents")
+    model = nb_train(d)
+    narrow, shuffle = _both_shapes(spark, d, model)
+    assert narrow == shuffle and len(narrow) > 0
+    narrow, shuffle = _both_shapes(spark, d, model, keep_input=True)
+    assert narrow == shuffle
+    assert nb_classify(d, model, keep_input=True).columns == (
+        d.columns + ["nb_pred", "score6"]
+    )
+
+
+def test_nb_kernel_matches_shuffle_plan_on_edge_docs(spark):
+    """Score ties (symmetric classes: the smaller label wins on both
+    shapes), a single-empty-token document (blank text tokenizes to
+    ``[""]``), an all-unseen document, and a NULL-text document (no
+    token, so no row on either shape)."""
+    train = _docs(spark, [
+        (1, "y", "foo bar"),
+        (2, "x", "foo bar"),
+        (3, "z", "qux qux qux"),
+    ])
+    model = nb_train(train)
+    test = _docs(spark, [
+        (10, None, "foo bar"),
+        (11, None, ""),
+        (12, None, "   "),
+        (13, None, "never seen words"),
+        (14, None, None),
+        (15, None, "Foo  BAR qux"),
+    ])
+    narrow, shuffle = _both_shapes(spark, test, model)
+    assert narrow == shuffle
+    got = {r[0]: r for r in narrow}
+    assert set(got) == {10, 11, 12, 13, 15}
+    assert got[10][1] == "x"  # tie: (score6 desc, label asc)
+    assert got[11] == (11,) + got[12][1:]
+
+
+def test_nb_kernel_matches_shuffle_plan_on_stored_model(spark, tmp_path):
+    """A stored model (``nb_save`` → ``nb_load``) takes the kernel
+    too, with the same rows as the shuffle plan and the in-memory
+    model."""
+    from capital.llm.nbayes import nb_load, nb_save
+
+    train = _docs(spark, [
+        (1, "a", "apple apple banana"),
+        (2, "a", "apple banana banana cherry"),
+        (3, "b", "zebra zebra yak"),
+        (4, "b", "zebra yak yak kiwi"),
+        (5, "c", "kiwi cherry"),
+    ])
+    model = nb_train(train)
+    nb_save(model, str(tmp_path / "nbm"))
+    loaded = nb_load(spark, str(tmp_path / "nbm"))
+    narrow, shuffle = _both_shapes(spark, train, loaded)
+    assert narrow == shuffle
+    assert narrow == sorted(map(tuple, nb_classify(train, model).collect()))

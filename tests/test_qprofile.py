@@ -39,6 +39,8 @@ def test_profile_record(spark, sf_dir, name):
     assert rec["result_rows"] == all_queries()[name](spark, sf_dir).count()
     assert sum(rec.get(f"jobs.{m}", 0) for m in MODULES) == rec["exec.jobs"]
     assert len(rec["timeline"]) == rec["exec.jobs"]
+    assert rec["jvm.jit_s"] >= 0 and rec["jvm.gc_s"] >= 0
+    assert isinstance(rec["jvm.classes_loaded"], int) and rec["jvm.classes_loaded"] >= 0
     clear_engine_cache(spark)
     clear_plan_cache()
 
@@ -65,6 +67,29 @@ def test_off_thread_jobs_are_counted(spark, sf_dir):
     assert rec["exec.jobs"] == len(new)
     groups = {j.get("jobGroup") for j in new.values()}
     assert len(groups) > 1, f"no job outside the run's group: {groups}"
+
+
+def test_jvm_counters_are_cumulative(spark):
+    """The JVM beans are reachable and only grow: a job in between
+    never lowers JIT, GC or class-load totals."""
+    a = qprofile.jvm_counters(spark)
+    spark.range(20000).selectExpr("sum(id * 3)").collect()
+    b = qprofile.jvm_counters(spark)
+    assert set(a) == {"jvm.jit_s", "jvm.gc_s", "jvm.classes_loaded"}
+    assert a["jvm.jit_s"] > 0 and a["jvm.classes_loaded"] > 0
+    assert all(b[k] >= a[k] for k in a)
+
+
+def test_measure_records_jvm_deltas(spark, sf_dir, monkeypatch):
+    """``measure`` reports the counters' change over the run, not
+    their running totals."""
+    readings = iter([
+        {"jvm.jit_s": 10.0, "jvm.gc_s": 1.0, "jvm.classes_loaded": 100},
+        {"jvm.jit_s": 12.5, "jvm.gc_s": 1.25, "jvm.classes_loaded": 140},
+    ])
+    monkeypatch.setattr(qprofile, "jvm_counters", lambda _spark: next(readings))
+    rec = qprofile.measure(spark, "q1_pricing_summary", sf_dir)
+    assert (rec["jvm.jit_s"], rec["jvm.gc_s"], rec["jvm.classes_loaded"]) == (2.5, 0.25, 40)
 
 
 @pytest.mark.parametrize("argv", [

@@ -845,6 +845,30 @@ def test_read_prior_state_corrupt_store_propagates(spark, tmp_path):
         read_prior_state(spark, str(empty))
 
 
+def test_read_prior_state_missing_dir_runs_no_job(
+    spark, tmp_path, monkeypatch
+):
+    """A missing state dir (every first micro-batch) is detected on
+    the driver: ``None`` with no Spark job and no read attempted (a
+    failing read logged a WARN stack trace per first batch)."""
+    import capital.streaming.incremental as inc
+
+    def no_read(*_a, **_k):
+        raise AssertionError("read attempted on a missing state dir")
+
+    monkeypatch.setattr(inc, "read_parquet", no_read)
+    sc = spark.sparkContext
+    group = "read-prior-state-missing"
+    sc.setJobGroup(group, group)
+    try:
+        assert inc.read_prior_state(spark, str(tmp_path / "nope")) is None
+        assert inc.read_prior_state(spark, f"file://{tmp_path}/nope") is None
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_incremental_lines_stream_matches_batch_and_replays(
     spark, tmp_path
 ):

@@ -15,8 +15,13 @@ inside the run's wall interval from threads that carry no group
 Prints one row per query: its fastest run's jobs, stages, tasks, build
 and execute seconds, driver gap (wall not covered by any job), overlap
 credit (summed job wall minus the union of job intervals: >0 when
-concurrent jobs back-fill) and Janino compiles (``CodegenMetrics``; a
-warm query whose classes fit the codegen cache compiles ~0). With
+concurrent jobs back-fill), Janino compiles (``CodegenMetrics``; a
+warm query whose classes fit the codegen cache compiles ~0) and the
+driver JVM's own layer over the run: HotSpot JIT compile time
+(``jvm.jit_s``, summed over compiler threads, so it can exceed the
+wall), collector time (``jvm.gc_s``, all collectors) and classes
+loaded (``jvm.classes_loaded``). On a local master the executors run
+in the driver JVM, so these cover task work too. With
 exactly one name it also prints that run's job timeline: each job's
 gap since the previous job ended, wall, stage count, module and call
 site.
@@ -49,19 +54,34 @@ def _clear(spark) -> None:
     clear_plan_cache()
 
 
+def jvm_counters(spark) -> dict[str, float]:
+    """Cumulative driver-JVM counters from its management beans:
+    JIT compile seconds, GC seconds over every collector, classes
+    loaded. ``measure`` records their deltas over a run."""
+    mf = spark._jvm.java.lang.management.ManagementFactory  # noqa: SLF001
+    return {
+        "jvm.jit_s": mf.getCompilationMXBean().getTotalCompilationTime() / 1e3,
+        "jvm.gc_s": sum(
+            max(b.getCollectionTime(), 0) for b in mf.getGarbageCollectorMXBeans()
+        ) / 1e3,
+        "jvm.classes_loaded": mf.getClassLoadingMXBean().getTotalLoadedClassCount(),
+    }
+
+
 def measure(spark, name: str, sf_dir: str) -> dict:
     """One traced run of a registered query, caches cleared first.
 
     Returns the Tracer rollup (``exec.*``, ``jobs.<module>``,
     ``job_s.<module>``, ``transfer.tail_s``) plus ``build_s``,
     ``exec_s``, ``wall_s``, ``result_rows``, ``compiles``,
-    ``overlap_s`` and ``timeline`` (the run's jobs in submission
-    order)."""
+    ``overlap_s``, the ``jvm.*`` deltas of :func:`jvm_counters` and
+    ``timeline`` (the run's jobs in submission order)."""
     fn = all_queries()[name]
     _clear(spark)
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
     tracer = Tracer(spark, f"qprofile-{uuid.uuid4().hex[:12]}", enabled=True)
     c0 = codegen.METRIC_COMPILATION_TIME().getCount()
+    jvm0 = jvm_counters(spark)
     try:
         with tracer.op(name) as op:
             with tracer.span("queries.build", "queries.build_s"):
@@ -72,6 +92,7 @@ def measure(spark, name: str, sf_dir: str) -> dict:
     finally:
         _clear(spark)
     compiles = codegen.METRIC_COMPILATION_TIME().getCount() - c0
+    jvm = {k: v - jvm0[k] for k, v in jvm_counters(spark).items()}
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
     tracer.attach_jobs()
     rec = tracer.rollup()
@@ -80,6 +101,7 @@ def measure(spark, name: str, sf_dir: str) -> dict:
         result_rows=rows, compiles=compiles,
         overlap_s=sum(v for k, v in rec.items() if k.startswith("job_s."))
         - rec["exec.job_busy_s"],
+        **jvm,
     )
     prev_end = op.start
     rec["timeline"] = []
@@ -127,14 +149,16 @@ def main(argv: list[str] | None = None) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     try:
         print(f"{'query':36s} {'jobs':>4s} {'stages':>6s} {'tasks':>6s} {'build_s':>7s} "
-              f"{'exec_s':>7s} {'gap_s':>6s} {'overlap_s':>9s} {'compiles':>8s} {'rows':>8s}")
+              f"{'exec_s':>7s} {'gap_s':>6s} {'overlap_s':>9s} {'compiles':>8s} "
+              f"{'jit_s':>6s} {'gc_s':>5s} {'classes':>7s} {'rows':>8s}")
         for name in names:
             recs = [profile(spark, name, args.sf) for _ in range(args.runs)]
             r = min(recs, key=lambda r: r["wall_s"])
             print(f"{name:36s} {r['exec.jobs']:4.0f} {r['exec.stages']:6.0f} "
                   f"{r['exec.tasks']:6.0f} {r['build_s']:7.3f} {r['exec_s']:7.3f} "
                   f"{r['exec.driver_gap_s']:6.3f} {r['overlap_s']:9.3f} "
-                  f"{r['compiles']:8d} {r['result_rows']:8d}")
+                  f"{r['compiles']:8d} {r['jvm.jit_s']:6.2f} {r['jvm.gc_s']:5.2f} "
+                  f"{r['jvm.classes_loaded']:7d} {r['result_rows']:8d}")
         if len(names) == 1:
             print(f"\n{'job':>6s} {'gap_ms':>7s} {'wall_ms':>7s} {'stg':>4s}  "
                   f"{'module':16s} call site")
