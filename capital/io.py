@@ -372,18 +372,24 @@ def overlapped_job(fn, *args, **kwargs):
 def write_partitioned(
     df: DataFrame,
     path: str,
-    partition_col: str = YMD,
-    mode: str = "overwrite",
+    partition_cols: str | Sequence[str] = YMD,
 ) -> None:
-    """Write a ``ymd=``-partitioned parquet dataset.
+    """Write a parquet dataset partitioned by ``partition_cols``
+    (``ymd=`` by default), replacing only the partitions present in
+    ``df`` — the engine's version of the reference's idempotent
+    ``replace=True`` S3 upload (dags/common/s3_utils.py:13), and the
+    one state write of the incremental runners (``batch_id=``).
 
-    With ``partitionOverwriteMode=dynamic`` (set by
-    :func:`capital.session.get_spark`) mode="overwrite" replaces only the
-    partitions present in ``df`` — the engine's version of the
-    reference's idempotent ``replace=True`` S3 upload
-    (dags/common/s3_utils.py:13).
+    Dynamic ``partitionOverwriteMode`` is set on the writer, not taken
+    from the session: under Spark's default STATIC mode an overwrite
+    wipes every partition of ``path`` that ``df`` does not hold, so a
+    session that skipped :func:`capital.session.tune_existing` would
+    lose all earlier days or batches on the next write.
     """
-    df.write.mode(mode).partitionBy(partition_col).parquet(path)
+    cols = [partition_cols] if isinstance(partition_cols, str) else partition_cols
+    df.write.mode("overwrite").partitionBy(*cols).option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
 
 
 #: Hidden working dirs for :func:`compact_partition` — leading ``.``

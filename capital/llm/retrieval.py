@@ -48,7 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from capital.io import read_parquet
+from capital.io import read_parquet, write_partitioned
+from capital.streaming.incremental import run_available_now
 
 #: BM25 hyperparameters (the canonical defaults).
 K1 = 1.2
@@ -368,28 +369,26 @@ def bm25_index_write_batch(
         F.count(F.lit(1)).alias("tf")
     ).localCheckpoint(eager=False)  # consumed twice (tf write + df);
     # lazy — the tf write materializes it (round 16, one job fewer)
-    tf.withColumn("batch_id", F.lit(batch_id)).withColumn(
-        "pbucket", F.pmod(F.xxhash64("token"), F.lit(N_POSTING_BUCKETS))
-    ).write.mode("overwrite").partitionBy("batch_id", "pbucket").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(f"{index_dir}/tf")
+    write_partitioned(
+        tf.withColumn("batch_id", F.lit(batch_id)).withColumn(
+            "pbucket", F.pmod(F.xxhash64("token"), F.lit(N_POSTING_BUCKETS))
+        ),
+        f"{index_dir}/tf",
+        ("batch_id", "pbucket"),
+    )
     df_part = tf.groupBy("token").agg(F.count(F.lit(1)).alias("dfc"))
-    df_part.withColumn("batch_id", F.lit(batch_id)).write.mode(
-        "overwrite"
-    ).partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(f"{index_dir}/df")
+    write_partitioned(
+        df_part.withColumn("batch_id", F.lit(batch_id)), f"{index_dir}/df", "batch_id"
+    )
     stats = narrow.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(tokens(normalized(F.col(text_col)))))
         .cast("long")
         .alias("dl_sum"),
     )
-    stats.withColumn("batch_id", F.lit(batch_id)).write.mode(
-        "overwrite"
-    ).partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(f"{index_dir}/stats")
+    write_partitioned(
+        stats.withColumn("batch_id", F.lit(batch_id)), f"{index_dir}/stats", "batch_id"
+    )
 
 
 def write_bm25_index(
@@ -549,17 +548,10 @@ def incremental_bm25_index_run(
     documents (the file-stream contract — each file is ingested
     once)."""
 
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         bm25_index_write_batch(batch_df, batch_id, index_dir, id_col, text_col)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, step, checkpoint_dir, fmt,
+        max_files_per_trigger,
     )

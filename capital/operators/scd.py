@@ -32,7 +32,7 @@ import functools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from capital.io import read_parquet
+from capital.io import read_parquet, write_partitioned
 
 VALID_FROM = "valid_from"
 VALID_TO = "valid_to"
@@ -254,9 +254,7 @@ def scd2_apply_split(
 
     # (1) Append-only closed history: exactly the valid_to=batch_date
     # partition is (re)written; every earlier partition is untouched.
-    closed_now.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(VALID_TO).parquet(closed_dir)
+    write_partitioned(closed_now, closed_dir, VALID_TO)
 
     # (2) Stage → swap the open slice (reader-safe, crash-recoverable).
     staging = open_dir.parent / _COMPACT_TMP / _OPEN

@@ -38,9 +38,7 @@ def refresh_calendar(
     target = year + 2
     cal = build_calendar(spark, f"{target}-01-01", f"{target}-12-31")
     out = cal.withColumn("year_part", F.col("year"))
-    out.write.mode("overwrite").partitionBy("year_part").parquet(
-        lake.path("silver", "dim_calendar")
-    )
+    write_partitioned(out, lake.path("silver", "dim_calendar"), "year_part")
     return cal
 
 

@@ -13,6 +13,22 @@ Mapping:
 Scale: the file source lists new files per trigger; with
 ``maxFilesPerTrigger`` the engine admits bounded batches, so a backlog
 (e.g. a month of missed days) drains without a single giant batch.
+
+Every ``foreachBatch`` runner is a step function started by
+:func:`run_available_now`. The sink has no transactional contract with
+the checkpoint, so a crash between a batch's writes and its checkpoint
+commit replays the batch. The replay contract that makes the state
+machines converge anyway:
+
+- batch N reads prior state only from partitions ``batch_id < N``
+  (:func:`read_prior_batches`), so a replay sees the same history;
+- batch N writes only its own partitions, by dynamic partition
+  overwrite (:func:`capital.io.write_partitioned`), so a replay
+  rewrites them to the same bytes instead of appending duplicates.
+
+Read halves fold the partitions with order-free operations (sums,
+``bit_or``, distinct unions), so the result does not depend on which
+batches were replayed.
 """
 
 from __future__ import annotations
@@ -24,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from capital.io import read_parquet
+from capital.io import read_parquet, write_partitioned
 
 
 def read_prior_state(spark: SparkSession, path: str) -> DataFrame | None:
@@ -53,6 +69,58 @@ def read_prior_state(spark: SparkSession, path: str) -> DataFrame | None:
     return read_parquet(spark, path)
 
 
+def read_prior_batches(
+    spark: SparkSession, path: str, batch_id: int
+) -> DataFrame | None:
+    """The partitions of a per-batch state store written by batches
+    before ``batch_id`` (the replay contract's read), or ``None`` when
+    no batch has written it yet. Failure semantics are
+    :func:`read_prior_state`'s."""
+    st = read_prior_state(spark, path)
+    return None if st is None else st.filter(F.col("batch_id") < batch_id)
+
+
+def _file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema: StructType,
+    fmt: str,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.format(fmt).load(source_dir)
+
+
+def run_available_now(
+    spark: SparkSession,
+    source_dir: str,
+    schema: StructType,
+    step: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    fmt: str = "parquet",
+    max_files_per_trigger: int | None = None,
+) -> StreamingQuery:
+    """Start one catch-up pass of ``step(batch_df, batch_id)`` over the
+    files in ``source_dir`` not yet recorded in ``checkpoint_dir``
+    (``Trigger.AvailableNow``: process everything new, then stop).
+
+    Returns the started query; the caller awaits termination. A step
+    that raises fails the query (``awaitTermination`` raises,
+    ``exception()`` is set) and leaves its batch uncommitted, so the
+    next run on the same checkpoint processes that batch again — the
+    replay the module's contract makes safe.
+    """
+    return (
+        _file_stream(spark, source_dir, schema, fmt, max_files_per_trigger)
+        .writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def incremental_run(
     spark: SparkSession,
     source_dir: str,
@@ -69,10 +137,7 @@ def incremental_run(
     with the same checkpoint is a no-op for already-seen files — the
     engine's version of the reference's idempotent re-runs.
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.format(fmt).load(source_dir)
+    stream = _file_stream(spark, source_dir, schema, fmt, max_files_per_trigger)
     out = transform(stream)
     return (
         out.writeStream.format("parquet")
@@ -104,20 +169,11 @@ def incremental_partition_overwrite(
     (dags/common/s3_utils.py:13; industry_code_glue_job.py:57).
     """
 
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = transform(batch_df)
-        out.write.mode("overwrite").partitionBy(partition_col).parquet(
-            sink_dir
-        )
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        write_partitioned(transform(batch_df), sink_dir, partition_col)
 
-    return (
-        spark.readStream.schema(schema)
-        .format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, step, checkpoint_dir, fmt
     )
 
 
@@ -149,18 +205,11 @@ def incremental_upsert_jdbc(
     """
     from capital.io import upsert_jdbc
 
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = transform(batch_df)
-        upsert_jdbc(out, url, table, keys, options=options)
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        upsert_jdbc(transform(batch_df), url, table, keys, options=options)
 
-    return (
-        spark.readStream.schema(schema)
-        .format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, step, checkpoint_dir, fmt
     )
 
 
@@ -218,26 +267,18 @@ def incremental_with_dead_letter(
     amount, unit = max_age.split()
     age = F.expr(f"INTERVAL {amount} {unit}")
 
-    def _route(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         horizon = batch_df.agg(F.max(ts_col)).collect()[0][0]
         if horizon is None:
             return
         stamped = batch_df.withColumn("__batch", F.lit(batch_id))
         late = stamped.filter(F.col(ts_col) < F.lit(horizon) - age)
         fresh = stamped.filter(F.col(ts_col) >= F.lit(horizon) - age)
-        late.write.mode("overwrite").partitionBy("__batch").parquet(
-            dead_letter_dir
-        )
-        fresh.write.mode("overwrite").partitionBy("__batch").parquet(sink_dir)
+        write_partitioned(late, dead_letter_dir, "__batch")
+        write_partitioned(fresh, sink_dir, "__batch")
 
-    return (
-        spark.readStream.schema(schema)
-        .format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_route)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, step, checkpoint_dir, fmt
     )
 
 
@@ -399,11 +440,8 @@ def incremental_psi_run(
     indexes in ``llm/cdc.py``: history is never re-scanned).
 
     Exactly-once effect without a transactional sink: the per-batch
-    partial is written with dynamic partition OVERWRITE keyed on
-    ``batch_id`` (the ``incremental_partition_overwrite`` pattern), so
-    a replayed batch (crash between sink write and checkpoint commit)
-    rewrites its own partition to the same bytes instead of
-    double-counting — the counts stay convergent.
+    partial is the batch's own ``batch_id=`` partition (the module's
+    replay contract), so a replay cannot double-count.
 
     Scale: per-batch state is K bins (dimension-sized); the corpus is
     scanned once per batch by the map-side-combined count. Reading the
@@ -418,27 +456,18 @@ def incremental_psi_run(
     """
     b = F.col(bin_col) if isinstance(bin_col, str) else bin_col
 
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         counts = (
             batch_df.select(b.alias("bin"))
             .groupBy("bin")
             .agg(F.count(F.lit(1)).alias("n_cur"))
             .withColumn("batch_id", F.lit(batch_id))
         )
-        counts.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(state_dir)
+        write_partitioned(counts, state_dir, "batch_id")
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, step, checkpoint_dir, fmt,
+        max_files_per_trigger,
     )
 
 
@@ -507,32 +536,22 @@ def incremental_funnel_run(
     funnel step is dropped at ingest, so state grows with funnel
     events only.
 
-    Idempotency: per-batch compacted events land in a ``batch_id=``
-    partition via dynamic overwrite — a replayed batch rewrites its
-    own partition (the established exactly-once-effect pattern);
+    Idempotency: per-batch compacted events land in the batch's own
+    ``batch_id=`` partition (the module's replay contract);
     cross-batch duplicates are removed at fold time.
     """
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         compact = (
             batch_df.filter(F.col(type_col).isin(steps))
             .select(user_col, type_col, ts_col)
             .dropDuplicates([user_col, type_col, ts_col])
             .withColumn("batch_id", F.lit(batch_id))
         )
-        compact.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(state_dir)
+        write_partitioned(compact, state_dir, "batch_id")
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, step, checkpoint_dir, fmt,
+        max_files_per_trigger,
     )
 
 
@@ -582,13 +601,10 @@ def incremental_bloom_run(
     Replay convergence without subtraction (a Bloom filter cannot
     un-set bits): the index is stored as ``batch_id=``-partitioned
     word-table PARTIALS, and batch N's flags are computed against the
-    merge of partitions with ``batch_id < N`` only — so a replayed
-    batch (crash between sink write and checkpoint commit) scores
-    against exactly the same prior state and dynamic-overwrites its
-    own partitions to the same bytes (``bit_or`` partials are
-    order-free; the PSI-monitor convergence argument). Merging
-    partials on read is bit-identical to a filter built at once
-    (``merge_bloom_words`` associativity, property-tested).
+    ``bit_or`` merge of partitions ``batch_id < N`` only (the module's
+    replay contract). Merging partials on read is bit-identical to a
+    filter built at once (``merge_bloom_words`` associativity,
+    property-tested).
 
     Within-batch duplicates are NOT flagged against each other (the
     index advances at batch granularity); callers needing intra-batch
@@ -612,18 +628,14 @@ def incremental_bloom_run(
     m = m_bits or DEFAULT_M_BITS
     kk = k or DEFAULT_K
 
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         # Missing state dir = first batch; any OTHER read failure
         # (empty dir, schema mismatch, corrupt parquet) propagates
         # via read_prior_state — silently scoring against an empty
         # filter would emit wrong seen_before=false flags, no error.
-        st = read_prior_state(spark, state_dir)
+        st = read_prior_batches(spark, state_dir, batch_id)
         if st is not None:
-            prior = (
-                st.filter(F.col("batch_id") < batch_id)
-                .groupBy("word_idx")
-                .agg(F.bit_or("word").alias("word"))
-            )
+            prior = st.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
         else:
             prior = spark.createDataFrame(
                 [], "word_idx bigint, word bigint"
@@ -635,29 +647,15 @@ def incremental_bloom_run(
             .select(*id_cols, key_col, "seen_before")
             .withColumn("batch_id", F.lit(batch_id))
         )
-        # Per-writer dynamic mode (scd.py pattern): under Spark's
-        # default STATIC partitionOverwriteMode an overwrite wipes ALL
-        # prior batch partitions — the accumulated Bloom state.
-        flags.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(flags_dir)
+        write_partitioned(flags, flags_dir, "batch_id")
         own = bloom_words(
             batch_df.select(F.col(key_col).alias("__k")), "__k", m, kk
         ).withColumn("batch_id", F.lit(batch_id))
-        own.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(state_dir)
+        write_partitioned(own, state_dir, "batch_id")
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, step, checkpoint_dir, fmt,
+        max_files_per_trigger,
     )
 
 
@@ -671,6 +669,26 @@ def bloom_state_words(spark: SparkSession, state_dir: str) -> DataFrame:
         read_parquet(spark, state_dir)
         .groupBy("word_idx")
         .agg(F.bit_or("word").alias("word"))
+    )
+
+
+def _prior_line_index(
+    spark: SparkSession, state_dir: str, batch_id: int
+) -> DataFrame:
+    """The distinct lines of the batches before ``batch_id`` as the
+    ``(__line, __seen)`` history relation of ``line_dedup_flags``."""
+    st = read_prior_batches(spark, state_dir, batch_id)
+    if st is None:
+        return spark.createDataFrame([], "__line string, __seen boolean")
+    return st.select("__line").distinct().withColumn("__seen", F.lit(True))
+
+
+def _own_lines(docs: DataFrame, text_col: str, batch_id: int) -> DataFrame:
+    """The batch's distinct lines: its partition of the line index."""
+    return (
+        docs.select(F.explode(F.split(F.col(text_col), "\n")).alias("__line"))
+        .distinct()
+        .withColumn("batch_id", F.lit(batch_id))
     )
 
 
@@ -700,11 +718,8 @@ def incremental_lines_run(
     ``batch_id``); the batch's DISTINCT lines join the index as its
     own ``batch_id=`` partition.
 
-    Replay convergence: batch N scores against partitions
-    ``batch_id < N`` only and dynamic-overwrites its own flag/state
-    partitions, so a replayed batch (crash between sink write and
-    checkpoint commit) reproduces identical bytes — the PSI/Bloom
-    convergence argument (distinct-union on read is order-free). On a
+    Replays converge by the module's replay contract (distinct-union
+    on read is order-free). On a
     ``doc_id``-ordered stream the union of flag partitions equals the
     batch operator run over the concatenated corpus exactly
     (first-batch-wins == global (doc, idx) min; stream-vs-batch
@@ -718,21 +733,10 @@ def incremental_lines_run(
     only.
     """
 
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         from capital.llm.c4 import line_dedup_flags
 
-        st = read_prior_state(spark, state_dir)
-        if st is not None:
-            prior = (
-                st.filter(F.col("batch_id") < batch_id)
-                .select("__line")
-                .distinct()
-                .withColumn("__seen", F.lit(True))
-            )
-        else:
-            prior = spark.createDataFrame(
-                [], "__line string, __seen boolean"
-            )
+        prior = _prior_line_index(spark, state_dir, batch_id)
         base = batch_df.select(id_col, text_col).localCheckpoint(
             eager=False
         )
@@ -742,33 +746,12 @@ def incremental_lines_run(
         flags = line_dedup_flags(
             base, id_col=id_col, text_col=text_col, prior=prior
         ).withColumn("batch_id", F.lit(batch_id))
-        flags.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(flags_dir)
-        own = (
-            base.select(
-                F.posexplode(F.split(F.col(text_col), "\n")).alias(
-                    "__idx", "__line"
-                )
-            )
-            .select("__line")
-            .distinct()
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        own.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(state_dir)
+        write_partitioned(flags, flags_dir, "batch_id")
+        write_partitioned(_own_lines(base, text_col, batch_id), state_dir, "batch_id")
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, step, checkpoint_dir, fmt,
+        max_files_per_trigger,
     )
 
 
@@ -811,9 +794,8 @@ def incremental_kmeans_run(
     into refreshed per-cell means at read time — integer partials are
     order-free and associative, so the fold equals a single Lloyd's
     mean update computed over ALL vectors ever seen (stream-vs-batch
-    equality tested), and a replayed batch (crash between sink write
-    and checkpoint commit) dynamic-overwrites its own partitions to
-    the same bytes (the PSI/Bloom convergence argument). Re-centering
+    equality tested), and replays converge by the module's replay
+    contract. Re-centering
     is the OPERATOR'S periodic decision: swap the refreshed centroid
     table in and the next batches assign against it — the same
     rebuild cadence a stored IVF index has.
@@ -827,15 +809,12 @@ def incremental_kmeans_run(
     k = len(centroids)
     dim = len(centroids[0]) if k else 0
 
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         labeled = assign_cells(batch_df, centroids, vec_col=vec_col)
-        (
-            labeled.select(*id_cols, "cell")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(assign_dir)
+        write_partitioned(
+            labeled.select(*id_cols, "cell").withColumn("batch_id", F.lit(batch_id)),
+            assign_dir,
+            "batch_id",
         )
         q = F.floor(
             F.col("__v").cast("double") * F.lit(1e6) + F.lit(0.5)
@@ -848,23 +827,11 @@ def incremental_kmeans_run(
             .agg(F.sum(q).alias("sum_micro"), F.count(F.lit(1)).alias("n"))
             .withColumn("batch_id", F.lit(batch_id))
         )
-        (
-            partial.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(state_dir)
-        )
+        write_partitioned(partial, state_dir, "batch_id")
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, step, checkpoint_dir, fmt,
+        max_files_per_trigger,
     )
 
 
@@ -937,10 +904,8 @@ def semdedup_write_batch(
     # propagates via read_prior_state (the Bloom-run contract:
     # silently scoring against an empty store emits wrong keep
     # flags, no error).
-    mem = read_prior_state(spark, members_dir)
-    if mem is not None:
-        prior = mem.filter(F.col("batch_id") < batch_id)
-    else:
+    prior = read_prior_batches(spark, members_dir, batch_id)
+    if prior is None:
         prior = spark.createDataFrame(
             [],
             labeled.withColumn("batch_id", F.lit(0)).schema,
@@ -993,13 +958,9 @@ def semdedup_write_batch(
         )
         .withColumn("batch_id", F.lit(batch_id))
     )
-    flags.write.mode("overwrite").partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(flags_dir)
+    write_partitioned(flags, flags_dir, "batch_id")
     members = labeled.withColumn("batch_id", F.lit(batch_id))
-    members.write.mode("overwrite").partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(members_dir)
+    write_partitioned(members, members_dir, "batch_id")
 
 
 def incremental_semdedup_run(
@@ -1031,13 +992,12 @@ def incremental_semdedup_run(
       precomputed once (the round-4 keying rule);
     - each batch vector is flagged against (a) its cell's STORED
       members — prior batches only, ``batch_id < N`` partition
-      pruning, the Bloom-run replay discipline — and (b) its cell's
+      pruning — and (b) its cell's
       SMALLER-ID batchmates (through ``chunked_pair_join``, so a
       degenerate within-batch cell stays task-bounded);
-    - flags land as ``batch_id=`` partitions (dynamic overwrite) and
-      the batch's labeled vectors append to the member store the
-      same way, so a replayed batch scores against exactly the same
-      prior state and rewrites its own partitions to the same bytes.
+    - flags land as ``batch_id=`` partitions and the batch's labeled
+      vectors append to the member store the same way (the module's
+      replay contract).
 
     With id-ordered arrival (ingest order — the streaming analogue of
     the batch operator's min-id-wins rule) the accumulated flags
@@ -1057,22 +1017,15 @@ def incremental_semdedup_run(
     ``members_dir`` by cell (on top of the batch_id replay
     partitioning) so the probe prunes to the batch's cells.
     """
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         semdedup_write_batch(
             spark, batch_df, batch_id, centroids,
             members_dir, flags_dir, threshold, id_col, vec_col,
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, step, checkpoint_dir, fmt,
+        max_files_per_trigger,
     )
 
 
@@ -1090,18 +1043,16 @@ def pack_write_batch(
     """One micro-batch of the incremental packer (module-level so a
     replayed batch is directly testable): continue each stream from
     the token offset accumulated by PRIOR batches (``batch_id < N``
-    state fold — the Bloom-run replay discipline), emit the batch's
+    state fold — the module's replay contract), emit the batch's
     chunk PIECES, and land pieces + per-stream token-count partials as
     ``batch_id=`` dynamic-overwrite partitions. Idempotent given the
     durable state."""
     from capital.llm.assemble import token_pieces
 
-    st = read_prior_state(spark, state_dir)
+    st = read_prior_batches(spark, state_dir, batch_id)
     if st is not None:
-        base = (
-            st.filter(F.col("batch_id") < batch_id)
-            .groupBy(partition_col)
-            .agg(F.sum("n_ids").cast("long").alias("base"))
+        base = st.groupBy(partition_col).agg(
+            F.sum("n_ids").cast("long").alias("base")
         )
     else:  # PATH_NOT_FOUND: first batch
         base = None
@@ -1113,19 +1064,15 @@ def pack_write_batch(
         order_col=order_col,
         base_offsets=base,
     )
-    pieces.withColumn("batch_id", F.lit(batch_id)).write.mode(
-        "overwrite"
-    ).partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(pieces_dir)
+    write_partitioned(
+        pieces.withColumn("batch_id", F.lit(batch_id)), pieces_dir, "batch_id"
+    )
     state = batch_df.groupBy(partition_col).agg(
         F.sum(F.size(F.col(ids_col))).cast("long").alias("n_ids")
     )
-    state.withColumn("batch_id", F.lit(batch_id)).write.mode(
-        "overwrite"
-    ).partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(state_dir)
+    write_partitioned(
+        state.withColumn("batch_id", F.lit(batch_id)), state_dir, "batch_id"
+    )
 
 
 def incremental_pack_run(
@@ -1167,22 +1114,15 @@ def incremental_pack_run(
     bounded at ≤ seq_len ids per chunk.
     """
 
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         pack_write_batch(
             spark, batch_df, batch_id, seq_len, pieces_dir, state_dir,
             ids_col, partition_col, order_col,
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, step, checkpoint_dir, fmt,
+        max_files_per_trigger,
     )
 
 
@@ -1225,10 +1165,7 @@ def incremental_curation_run(
 
     Survivor rows land in ``flags_dir`` as one ``batch_id=`` partition
     per micro-batch with the batch funnel's exact output columns.
-    Replay convergence: every read filters ``batch_id < current`` and
-    every write is a dynamic partition overwrite of the batch's own
-    partitions, so a replayed batch reproduces identical bytes (the
-    lines/Bloom/PSI argument).
+    Replays converge by the module's replay contract.
 
     Stream-vs-batch equality: on a ``doc_id``-ascending stream the
     union of flag partitions equals the batch funnel (same stored
@@ -1241,7 +1178,7 @@ def incremental_curation_run(
     semantics).
     """
 
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         from capital.llm.assemble import decontaminate_spans
         from capital.llm.c4 import line_dedup_flags
         from capital.llm.clusters import connected_components
@@ -1280,18 +1217,7 @@ def incremental_curation_run(
         ).localCheckpoint(eager=False)
 
         # --- line dedup vs the growing line index ---------------------
-        st = read_prior_state(spark, lines_state_dir)
-        if st is not None:
-            prior = (
-                st.filter(F.col("batch_id") < batch_id)
-                .select("__line")
-                .distinct()
-                .withColumn("__seen", F.lit(True))
-            )
-        else:
-            prior = spark.createDataFrame(
-                [], "__line string, __seen boolean"
-            )
+        prior = _prior_line_index(spark, lines_state_dir, batch_id)
         ld = line_dedup_flags(
             c3.select("doc_id", "text"), text_col="text",
             prior=prior, with_text=True,
@@ -1303,13 +1229,7 @@ def incremental_curation_run(
             ),
             "doc_id",
         ).localCheckpoint(eager=False)
-        own_lines = (
-            c3.select(
-                F.explode(F.split("text", "\n")).alias("__line")
-            )
-            .distinct()
-            .withColumn("batch_id", F.lit(batch_id))
-        )
+        own_lines = _own_lines(c3, "text", batch_id)
 
         # --- near-dup dedup vs the growing band+shingle state ---------
         mh = dict(V2_MH)
@@ -1325,8 +1245,8 @@ def incremental_curation_run(
             sigs, bands=mh["bands"],
             rows_per_band=mh["rows_per_band"],
         )
-        prior_bands = read_prior_state(spark, bands_state_dir)
-        prior_sh = read_prior_state(spark, shingles_state_dir)
+        prior_bands = read_prior_batches(spark, bands_state_dir, batch_id)
+        prior_sh = read_prior_batches(spark, shingles_state_dir, batch_id)
         hist_hits = None
         # BOTH state tables must exist to probe history: a replay of
         # a partially-failed first batch (bands written, shingles
@@ -1334,10 +1254,6 @@ def incremental_curation_run(
         # its batch_id<0 filter reads empty state anyway (round-16
         # review).
         if prior_bands is not None and prior_sh is not None:
-            prior_bands = prior_bands.filter(
-                F.col("batch_id") < batch_id
-            )
-            prior_sh = prior_sh.filter(F.col("batch_id") < batch_id)
             cand = (
                 bkeys.join(
                     prior_bands.select(
@@ -1437,20 +1353,9 @@ def incremental_curation_run(
                 shingles_state_dir,
             ),
         ):
-            df_out.write.mode("overwrite").partitionBy(
-                "batch_id"
-            ).option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(path)
+            write_partitioned(df_out, path, "batch_id")
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, source_dir, schema, step, checkpoint_dir, fmt,
+        max_files_per_trigger,
     )

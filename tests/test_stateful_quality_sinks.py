@@ -99,8 +99,23 @@ def test_sinks_roundtrip(spark, sf_dir, tmp_path):
     assert back.count() == 25 and "n_name" in back.columns
 
 
-def test_partitioned_dynamic_overwrite(spark, sf_dir, tmp_path):
-    """K3/K5: overwriting one ymd partition must not truncate others."""
+@pytest.fixture(params=["dynamic", "static"])
+def session_overwrite_mode(spark, request):
+    """The session's ``partitionOverwriteMode`` for one test, restored
+    afterwards: ``static`` is Spark's default, a session that skipped
+    ``tune_existing``."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.set(key, before)
+
+
+def test_partitioned_dynamic_overwrite(
+    spark, sf_dir, tmp_path, session_overwrite_mode
+):
+    """K3/K5: overwriting one ymd partition must not truncate others,
+    whatever the session's partitionOverwriteMode."""
     path = str(tmp_path / "lake")
     ev = load_table(spark, sf_dir, "events").withColumn(
         "ymd", F.to_date("ts")
